@@ -44,32 +44,7 @@ def main() -> None:
     spark = get_spark("bench")
     qs = e.queries()
 
-    # warm the JVM (codegen, parquet reader, shuffle machinery) AND the
-    # Python UDF workers once so per-query numbers measure the queries,
-    # not session startup — since r6 the bank leads with heavy corpus
-    # queries (driver-sampling order), so startup cost would otherwise
-    # land on whichever query happens to run first
-    from pyspark.sql import functions as _F
-
-    from collection_templates_spark.sources.testdata import load_table, load_tables
-
-    for df in load_tables(spark, sf_dir).values():
-        df.schema  # footer read only
-    load_table(spark, "lineitem", sf_dir).groupBy("l_returnflag").count().collect()
-    load_table(spark, "documents", sf_dir).agg(
-        _F.sum(_F.length("text"))
-    ).collect()
-    load_table(spark, "embeddings", sf_dir).limit(64).agg(
-        _F.count("*")
-    ).collect()
-    # spin up Arrow python workers with an existing module-scope pandas
-    # UDF (local UDF definitions break type-hint resolution — the repo's
-    # documented quarantine rule)
-    from collection_templates_spark.functions.udfs import suffix_stem_udf
-
-    spark.range(0, 1024, 1, 8).select(
-        suffix_stem_udf(_F.col("id").cast("string")).alias("s")
-    ).write.format("noop").mode("overwrite").save()
+    warmup(spark, sf_dir)
 
     # min of N_RUNS warm runs per query: round-over-round comparisons
     # measure the queries, not scheduler/GC noise on a shared machine
@@ -170,6 +145,30 @@ def main() -> None:
             }
         )
     )
+
+
+def warmup(spark, sf_dir: str) -> None:
+    """Warm the JVM (codegen, parquet reader, shuffle machinery) AND the
+    Python UDF workers once so per-query numbers measure the queries,
+    not session startup — the bank leads with heavy corpus queries, so
+    startup cost would otherwise land on whichever query happens to run
+    first."""
+    from pyspark.sql import functions as F
+
+    from collection_templates_spark.functions.udfs import suffix_stem_udf
+    from collection_templates_spark.sources.testdata import load_table, load_tables
+
+    for df in load_tables(spark, sf_dir).values():
+        df.schema  # footer read only
+    load_table(spark, "lineitem", sf_dir).groupBy("l_returnflag").count().collect()
+    load_table(spark, "documents", sf_dir).agg(F.sum(F.length("text"))).collect()
+    load_table(spark, "embeddings", sf_dir).limit(64).agg(F.count("*")).collect()
+    # spin up Arrow python workers with an existing module-scope pandas
+    # UDF (local UDF definitions break type-hint resolution — the repo's
+    # documented quarantine rule)
+    spark.range(0, 1024, 1, 8).select(
+        suffix_stem_udf(F.col("id").cast("string")).alias("s")
+    ).write.format("noop").mode("overwrite").save()
 
 
 if __name__ == "__main__":

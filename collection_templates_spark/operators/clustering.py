@@ -24,13 +24,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# Round index from which the pointer-jump step runs. Quasi-clique dup
+# graphs (the common near-dup shape) reach the fixpoint in ≤ 2
+# propagation rounds, so skipping the jump there removes its extra
+# self-join from the common case; deep components simply start halving
+# two rounds later, keeping the O(log n) bound.
+_JUMP_FROM = 2
+
 
 def connected_components(
     pairs: DataFrame,
     left: str = "doc1",
     right: str = "doc2",
     max_iterations: int = 20,
-    jump_from: int = 2,
 ) -> DataFrame:
     """(node, cluster) with cluster = min node id in the component.
 
@@ -42,12 +48,6 @@ def connected_components(
     fixpoint (with the default 20 that would take a component needing
     >2^20-scale label paths — effectively unreachable; the guard exists
     so a truncated result can never be silently returned).
-
-    ``jump_from``: round index from which the jump step runs. Quasi-clique
-    dup graphs (the common near-dup shape) reach the fixpoint in ≤ 2
-    propagation rounds, so skipping the jump there removes its extra
-    self-join from the common case; deep components simply start halving
-    two rounds later, keeping the O(log n) bound.
     """
     edges = (
         pairs.select(F.col(left).alias("a"), F.col(right).alias("b"))
@@ -75,7 +75,7 @@ def connected_components(
                 F.col("cluster"), F.coalesce("nmin", F.col("cluster"))
             ).alias("cluster"),
         )
-        if it >= jump_from:
+        if it >= _JUMP_FROM:
             # pointer jump: cluster := label(cluster). Labels are node
             # ids in the same component and only ever decrease, so the
             # jump is safe (monotone toward the component min) and

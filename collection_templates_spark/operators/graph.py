@@ -9,13 +9,14 @@ driver-side graph walks (SURVEY.md §2.3 J13, §7 step 4).
 Scale notes (the subclass graph is ~3.4M edges, the instance set ~100M):
 - We never materialize the full closure of the *instance* layer — only the
   closure of the small class-level graph, then semi-join instances to it.
-- Each iteration is join + distinct (one shuffle each); lineage is cut with
+- One frontier loop (``_expand``) serves ``transitive_closure``,
+  ``reachable_from`` and, through the latter, ontology validation. Each
+  iteration is join + distinct (one shuffle each); lineage is cut with
   ``localCheckpoint`` so the plan doesn't grow linearly with depth.
 - Cycles are tolerated: ``distinct`` + the subtract-known step make every
   frontier strictly new pairs, so a cycle converges instead of looping.
 - Skew: the ancestor side of popular classes (Q5 "human" subtree) is hot;
-  AQE skew-join handles it, and ``repartition`` on ``src`` before the loop
-  keeps the join co-partitioned across iterations.
+  AQE skew-join handles it.
 """
 
 from __future__ import annotations
@@ -29,33 +30,19 @@ def transitive_closure(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 30,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """All (src, dst) pairs such that dst is reachable from src.
 
     ``edges`` is a DataFrame with columns ``src``/``dst`` (direct edges are
     included in the result). Stops early when a fixpoint is reached.
+    Seeds :func:`_expand` with the distinct, lineage-cut edge set itself:
+    each edge is a (seed, reached) pair one hop long.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     e = e.localCheckpoint(eager=True)
-    closure = e
-    frontier = e
-    for i in range(max_iterations):
-        # expand: follow one more edge from the current frontier
-        grown = (
-            frontier.alias("f")
-            .join(e.alias("e"), F.col("f.dst") == F.col("e.src"))
-            .select(F.col("f.src").alias("src"), F.col("e.dst").alias("dst"))
-            .distinct()
-        )
-        new_pairs = grown.join(closure, ["src", "dst"], "left_anti")
-        if checkpoint_every and (i % checkpoint_every == 0):
-            new_pairs = new_pairs.localCheckpoint(eager=True)
-        if new_pairs.isEmpty():
-            break
-        closure = closure.unionByName(new_pairs).localCheckpoint(eager=True)
-        frontier = new_pairs
-    return closure
+    pairs = e.select(F.col("src").alias("seed"), F.col("dst").alias("node"))
+    closure = _expand(pairs, e, max_iterations)
+    return closure.select(F.col("seed").alias("src"), F.col("node").alias("dst"))
 
 
 def reachable_from(
@@ -65,20 +52,40 @@ def reachable_from(
     dst: str = "dst",
     max_iterations: int = 30,
 ) -> DataFrame:
-    """BFS from a seed set: returns (seed, reached) pairs.
+    """BFS from a seed set: returns (seed, node) pairs, including
+    (seed, seed).
 
     Cheaper than a full closure when only a subset of nodes matters (the
     reference only ever asks "is collection-type reachable from member-type",
-    so seeding with the distinct member types bounds the state).
+    so seeding with the distinct member types bounds the state). Ontology
+    validation walks the subclass edges backwards from the collection types
+    by passing ``src="dst", dst="src"``. The edge side is not de-duplicated:
+    the per-sweep ``distinct`` already collapses duplicate expansions.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     seeds = sources.select(F.col(sources.columns[0]).alias("seed")).distinct()
-    reached = seeds.select("seed", F.col("seed").alias("node"))
+    reached = seeds.select("seed", F.col("seed").alias("node")).localCheckpoint(
+        eager=True
+    )
+    return _expand(reached, e, max_iterations)
+
+
+def _expand(reached: DataFrame, e: DataFrame, max_iterations: int) -> DataFrame:
+    """The seeded frontier loop: grow the (seed, node) pairs ``reached``
+    along the (src, dst) edges ``e`` until no new pair appears.
+
+    Each sweep joins only the newest pairs against the edges, keeps the
+    pairs not yet reached, and cuts lineage on both the new pairs and the
+    running union. Cycles converge because every frontier is strictly new
+    pairs.
+    """
     frontier = reached
     for _ in range(max_iterations):
+        # expand: follow one more edge from the current frontier
         grown = (
-            frontier.join(e, frontier["node"] == e["src"])
-            .select("seed", e["dst"].alias("node"))
+            frontier.alias("f")
+            .join(e.alias("e"), F.col("f.node") == F.col("e.src"))
+            .select("f.seed", F.col("e.dst").alias("node"))
             .distinct()
         )
         new_pairs = grown.join(reached, ["seed", "node"], "left_anti").localCheckpoint(
@@ -89,6 +96,47 @@ def reachable_from(
         reached = reached.unionByName(new_pairs).localCheckpoint(eager=True)
         frontier = new_pairs
     return reached
+
+
+def _rank_inputs(
+    edges: DataFrame, src_col: str, dst_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The loop-invariant inputs of the rank sweeps: (nodes, out-degrees,
+    edges ⋈ out-degrees) with columns (node), (node, ___out) and
+    (___src, ___dst, ___out).
+
+    Lazy local checkpoints: the edge list, node set and out-degree table
+    are referenced in EVERY sweep, and each reference would otherwise
+    recompute the caller's full edge-derivation plan (measured 11.5 s →
+    2.9 s at sf0.1 for 3 sweeps over the customer↔supplier graph).
+    Iterative dataflow is the one shape where materializing the
+    loop-invariant inputs is mandatory — the same reason GraphX caches
+    its edge RDD. Lazy, so building the plan still triggers no job.
+
+    outdeg ⋈ edges is LOOP-INVARIANT too: joining it once here (r16)
+    removes one SortMergeJoin + its sort from EVERY sweep —
+    the unrolled plan shrinks by a join per iteration, which is also
+    query-planning and AQE-stage cost (this family is plan-floor-bound
+    at bench scale: sf0.001 ≈ half the sf0.1 wall). Inner-join order is
+    exact: sources without out-edges appear in neither edges nor
+    outdeg⋈edges, so per-edge contributions are identical.
+    """
+    edges = edges.localCheckpoint(eager=False)
+    nodes = (
+        edges.select(F.col(src_col).alias("node"))
+        .union(edges.select(F.col(dst_col).alias("node")))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    outdeg = edges.groupBy(F.col(src_col).alias("node")).agg(
+        F.count("*").alias("___out")
+    ).localCheckpoint(eager=False)
+    e = edges.select(
+        F.col(src_col).alias("___src"), F.col(dst_col).alias("___dst")
+    ).join(
+        outdeg.select(F.col("node").alias("___src"), "___out"), "___src"
+    ).localCheckpoint(eager=False)
+    return nodes, outdeg, e
 
 
 def pagerank(
@@ -131,40 +179,11 @@ def pagerank(
     iteration count is the production norm for ranking signals (e.g.
     3–5 sweeps), which is exactly what makes the unrolled plan and its
     engine replay possible."""
-    # Lazy local checkpoints: the edge list, node set and out-degree
-    # table are referenced in EVERY sweep, and each reference would
-    # otherwise recompute the caller's full edge-derivation plan
-    # (measured 11.5 s → 2.9 s at sf0.1 for 3 sweeps over the
-    # customer↔supplier graph). Iterative dataflow is the one shape
-    # where materializing the loop-invariant inputs is mandatory — the
-    # same reason GraphX caches its edge RDD. Lazy, so building the
-    # plan still triggers no job.
-    edges = edges.localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col(src_col).alias("node"))
-        .union(edges.select(F.col(dst_col).alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    outdeg = edges.groupBy(F.col(src_col).alias("node")).agg(
-        F.count("*").alias("___out")
-    ).localCheckpoint(eager=False)
+    nodes, outdeg, e = _rank_inputs(edges, src_col, dst_col)
     n_nodes = nodes.agg(F.count("*").alias("___n"))
     ranks = nodes.join(F.broadcast(n_nodes)).select(
         "node", (F.lit(1.0) / F.col("___n")).alias("pr")
     )
-    # outdeg ⋈ edges is LOOP-INVARIANT: joining it once here (r16,
-    # guide §2.2) removes one SortMergeJoin + its sort from EVERY
-    # sweep — the unrolled plan shrinks by a join per iteration, which
-    # is also driver-side analysis/AQE-stage cost (this family is
-    # plan-floor-bound at bench scale: sf0.001 ≈ half the sf0.1 wall).
-    # Inner-join order is exact: sources without out-edges appear in
-    # neither e nor outdeg⋈e, so per-edge contributions are identical.
-    e = edges.select(
-        F.col(src_col).alias("___src"), F.col(dst_col).alias("___dst")
-    ).join(
-        outdeg.select(F.col("node").alias("___src"), "___out"), "___src"
-    ).localCheckpoint(eager=False)
     for _ in range(iterations):
         if redistribute_dangling:
             # The rank iterate is consumed TWICE per sweep here (the
@@ -319,11 +338,40 @@ def hits(
     )
 
 
+def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The canonical undirected edge set: distinct (a, b) with a < b
+    (self-loops dropped), behind an eager lineage cut.
+
+    Every caller consumes it more than once (degree scans plus the
+    per-edge joins); without the cut the whole upstream edge construction
+    runs once per consumer (measured 3× the projection cost on the
+    co-purchase bank row).
+    """
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .filter(F.col("a") < F.col("b"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _degrees(e: DataFrame, node: str = "n", degree: str = "d") -> DataFrame:
+    """(node, degree): each node's degree over the canonical edge set ``e``."""
+    return (
+        e.select(F.col("a").alias(node))
+        .unionAll(e.select(F.col("b").alias(node)))
+        .groupBy(node)
+        .agg(F.count(F.lit(1)).alias(degree))
+    )
+
+
 def triangle_count(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    assume_canonical: bool = False,
 ) -> DataFrame:
     """Per-node triangle counts via degree-ordered edge orientation —
     the join formulation of Suri & Vassilvitskii (WWW 2011) / the
@@ -347,38 +395,16 @@ def triangle_count(
     up per node. Nodes in no triangle are absent (callers left-join and
     zero-fill).
 
-    ``assume_canonical``: the caller promises ``edges`` is already the
-    distinct (a < b) canonical edge set behind a lineage cut (e.g.
-    clustering_coefficient's checkpoint) — skips a redundant
-    distinct+checkpoint of identical rows.
-
     No reference counterpart (the reference's graph work is the ontology
     BFS, SURVEY §2.3 J13); this is the LLM/graph-analytics extension
     suite alongside pagerank/HITS.
     """
-    # e feeds THREE consumers (two degree scans + the orientation join);
-    # without the lineage cut the whole upstream edge construction runs
-    # once per consumer (measured 3× the projection cost on the
-    # co-purchase bank row).
-    if assume_canonical:
-        e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    else:
-        e = (
-            edges.select(
-                F.least(F.col(src), F.col(dst)).alias("a"),
-                F.greatest(F.col(src), F.col(dst)).alias("b"),
-            )
-            .filter(F.col("a") < F.col("b"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionAll(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=True)
-    )
+    return _triangles(_canonical_edges(edges, src, dst))
+
+
+def _triangles(e: DataFrame) -> DataFrame:
+    """:func:`triangle_count` over the canonical edge set ``e`` (a, b)."""
+    deg = _degrees(e).localCheckpoint(eager=True)
     keyed = e.join(
         deg.select(F.col("n").alias("a"), F.col("d").alias("da")), "a"
     ).join(deg.select(F.col("n").alias("b"), F.col("d").alias("db")), "b")
@@ -518,24 +544,10 @@ def kcore_stats(
     describes the graph AFTER i peels; a sweep that removes nothing is
     the fixed point (k-core reached).
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _canonical_edges(edges, src, dst)
     out = None
     for sweep in range(1, sweeps + 1):
-        deg = (
-            e.select(F.col("a").alias("n"))
-            .unionAll(e.select(F.col("b").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= k).select("n")
+        keep = _degrees(e).filter(F.col("d") >= k).select("n")
         e = (
             e.join(keep.withColumnRenamed("n", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("n", "b"), "b", "left_semi")
@@ -597,19 +609,11 @@ def link_prediction_jaccard(
     choice and OOM on a billion-node graph — AQE still broadcasts it
     when it is small.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _canonical_edges(edges, src, dst)
     adj = e.select(F.col("a").alias("n"), F.col("b").alias("nbr")).unionAll(
         e.select(F.col("b").alias("n"), F.col("a").alias("nbr"))
     )
-    deg = adj.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
+    deg = _degrees(e)
     centers = deg.filter(F.col("d") <= max_center_degree).select("n")
     adjc = adj.join(centers, "n", "left_semi")
     nbrs = adjc.groupBy("n").agg(
@@ -681,21 +685,8 @@ def degree_assortativity(
     O(|nodes|); AQE broadcasts it when small, shuffles it when not.
     Output: (n_nodes, n_edges, assortativity).
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionAll(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    e = _canonical_edges(edges, src, dst)
+    deg = _degrees(e)
     moments = deg.groupBy().agg(
         F.count(F.lit(1)).alias("n_nodes"),
         # coalesce: an empty graph must report n_edges = 0 (the old
@@ -748,26 +739,12 @@ def clustering_coefficient(
     O(m^1.5) wedge bound + a degree aggregate + a broadcast join.
     Output: (node, degree, n_triangles, clustering_coeff).
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # e is already the distinct (a < b) canonical set behind a lineage
-    # cut — assume_canonical skips triangle_count's redundant
-    # distinct+checkpoint of identical rows (r15: one Exchange + one
+    e = _canonical_edges(edges, src, dst)
+    # triangles over the same cut canonical set, not a second distinct +
+    # checkpoint of identical rows (r15: one Exchange + one
     # materialization job less)
-    tri = triangle_count(e, "a", "b", assume_canonical=True)
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionAll(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    tri = _triangles(e)
+    deg = _degrees(e, "node", "degree")
     joined = deg.join(tri, "node", "left").select(
         "node",
         F.col("degree").cast("long").alias("degree"),
@@ -975,16 +952,7 @@ def personalized_pagerank(
     one dst-keyed map-side-combined aggregate; the seed table is a
     second loop-invariant broadcast. Returns (node, ppr) 6dp.
     """
-    edges = edges.localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col(src_col).alias("node"))
-        .union(edges.select(F.col(dst_col).alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    outdeg = edges.groupBy(F.col(src_col).alias("node")).agg(
-        F.count("*").alias("___out")
-    ).localCheckpoint(eager=False)
+    nodes, _, e = _rank_inputs(edges, src_col, dst_col)
     seed_nodes = (
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
@@ -1003,14 +971,6 @@ def personalized_pagerank(
         eager=False
     )
     ranks = base.select("node", F.col("___r").alias("pr"))
-    # loop-invariant outdeg ⋈ edges joined ONCE (the pagerank r16
-    # rewrite): one SortMergeJoin fewer per sweep, smaller unrolled
-    # plan for the analysis/AQE driver floor that dominates this row.
-    e = edges.select(
-        F.col(src_col).alias("___src"), F.col(dst_col).alias("___dst")
-    ).join(
-        outdeg.select(F.col("node").alias("___src"), "___out"), "___src"
-    ).localCheckpoint(eager=False)
     d = float(damping)
     for _ in range(iterations):
         contribs = (

@@ -82,6 +82,11 @@ def run_checks(
         bad = F.coalesce(F.col(f"av__{c}"), F.lit(0))
         results.append(_res("accepted_values", c, bad, bad == 0))
 
+    if not results:
+        # explode(array()) over no checks is an array<null> and fails analysis
+        return df.sparkSession.createDataFrame(
+            [], "check string, column string, metric double, ok boolean"
+        )
     return (
         df.agg(*aggs)
         .select(F.explode(F.array(*results)).alias("___r"))

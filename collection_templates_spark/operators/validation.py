@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from collection_templates_spark.operators.graph import reachable_from
+
 # Wikimedia list article — removed from collection types before validation
 # (reference create_collections.py:633-640)
 FILTER_MEMBER_TYPES = ("Q13406463",)
@@ -89,36 +91,6 @@ def subclass_edges(db2: DataFrame, db6: DataFrame | None = None) -> DataFrame:
     return edges
 
 
-def reachability_from_targets(
-    edges: DataFrame, targets: DataFrame, max_iterations: int = 40
-) -> DataFrame:
-    """(target, node) pairs where node reaches target along subclass edges.
-
-    BFS on reversed edges seeded at the targets; lineage cut per iteration.
-    Includes (target, target) so a member typed exactly as the collection
-    type validates."""
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    seeds = targets.select(F.col(targets.columns[0]).alias("seed")).distinct()
-    reached = seeds.select("seed", F.col("seed").alias("node")).localCheckpoint(
-        eager=True
-    )
-    frontier = reached
-    for _ in range(max_iterations):
-        grown = (
-            frontier.join(rev, frontier["node"] == rev["src"])
-            .select("seed", rev["dst"].alias("node"))
-            .distinct()
-        )
-        new_pairs = grown.join(reached, ["seed", "node"], "left_anti").localCheckpoint(
-            eager=True
-        )
-        if new_pairs.isEmpty():
-            break
-        reached = reached.unionByName(new_pairs).localCheckpoint(eager=True)
-        frontier = new_pairs
-    return reached
-
-
 def validate_members(
     resolved: DataFrame,
     db2: DataFrame,
@@ -144,7 +116,12 @@ def validate_members(
 
     targets = coll.select(F.explode("type_ids").alias("t")).distinct()
     edges = subclass_edges(db2, db6)
-    reach = reachability_from_targets(edges, targets, max_iterations)
+    # backwards BFS: (target, node) pairs where node reaches the target
+    # along subclass edges, (target, target) included so a member typed
+    # exactly as the collection type validates
+    reach = reachable_from(
+        edges, targets, src="dst", dst="src", max_iterations=max_iterations
+    )
 
     # member entries: instance_of + subclass_of, with same_as redirect
     # fallback when the member qid has no entry at all (reference

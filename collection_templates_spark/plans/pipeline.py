@@ -67,14 +67,13 @@ def run_pipeline(
     spark: SparkSession,
     inputs: PipelineInputs,
     workdir: str | None = None,
-    use_corpus_model: bool = True,
 ):
     """Returns dict of stage outputs; persists stages when workdir given.
 
-    ``use_corpus_model``: build the unigram language model (F9/F10 real
-    scoring — functions/langmodel.py) from the wiki title corpus and use it
-    for interesting scores and name log-probabilities; the documented stubs
-    are used only when False or when the corpus is empty.
+    Builds the unigram language model (F9/F10 real scoring —
+    functions/langmodel.py) from the wiki title corpus and uses it for
+    interesting scores and name log-probabilities; the documented stubs
+    are used only when the corpus is empty.
     """
 
     stage_seconds: dict[str, float] = {}
@@ -101,28 +100,29 @@ def run_pipeline(
     # F9/F10 language model from the title corpus (the same names the
     # pipeline scores — the public-equivalent of NameRank's external model).
     # One extra corpus-sized aggregation; only the capped vocabulary
-    # histogram leaves the cluster, as a broadcast.
-    score_udf = log_prob_udf = None
-    if use_corpus_model:
-        from collection_templates_spark.functions.langmodel import (
-            UnigramModel,
-            word_frequency_model,
-        )
-        from collection_templates_spark.functions.udfs import (
-            broadcast_model,
-            interesting_score_udf_for,
-            log_probability_udf_for,
-        )
+    # histogram leaves the cluster, as a broadcast. Imported per call, not
+    # at module top, so wrappers patched onto these modules (perfbench's
+    # per-layer tracing) are the functions that run.
+    from collection_templates_spark.functions.langmodel import (
+        UnigramModel,
+        word_frequency_model,
+    )
+    from collection_templates_spark.functions.udfs import (
+        broadcast_model,
+        interesting_score_udf_for,
+        log_probability_udf_for,
+    )
 
-        model = UnigramModel.from_dataframe(
-            word_frequency_model(title_qid, text_col="title")
-        )
-        if model.vocab > 0:
-            # uuid-tagged broadcast → per-executor UnigramModel cache hit
-            # (plain-dict broadcasts rebuild the cost table per Arrow batch)
-            freqs_bc = broadcast_model(spark.sparkContext, model.freqs)
-            score_udf = interesting_score_udf_for(freqs_bc)
-            log_prob_udf = log_probability_udf_for(freqs_bc)
+    model = UnigramModel.from_dataframe(
+        word_frequency_model(title_qid, text_col="title")
+    )
+    score_udf = log_prob_udf = None
+    if model.vocab > 0:
+        # uuid-tagged broadcast → per-executor UnigramModel cache hit
+        # (plain-dict broadcasts rebuild the cost table per Arrow batch)
+        freqs_bc = broadcast_model(spark.sparkContext, model.freqs)
+        score_udf = interesting_score_udf_for(freqs_bc)
+        log_prob_udf = log_probability_udf_for(freqs_bc)
 
     # the (qid → title) direction used by collection extraction; the
     # reference keys these stores with the on-disk underscore form

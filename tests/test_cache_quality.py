@@ -47,6 +47,16 @@ def test_run_checks(spark):
     assert rep[("accepted_values", "status")] == (1.0, False)  # 'X'
 
 
+def test_run_checks_without_checks_is_empty_report(spark):
+    df = spark.createDataFrame([(1, "O")], "id int, status string")
+    rep = run_checks(df)
+    assert [(f.name, f.dataType.simpleString()) for f in rep.schema] == [
+        ("check", "string"), ("column", "string"),
+        ("metric", "double"), ("ok", "boolean"),
+    ]
+    assert rep.collect() == []
+
+
 def test_referential_integrity(spark):
     child = spark.createDataFrame([(1,), (2,), (9,), (None,)], "fk int")
     parent = spark.createDataFrame([(1,), (2,)], "pk int")

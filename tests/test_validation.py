@@ -2,8 +2,8 @@
 
 from pyspark.sql import functions as F
 
+from collection_templates_spark.operators.graph import reachable_from
 from collection_templates_spark.operators.validation import (
-    reachability_from_targets,
     subclass_edges,
     validate_members,
 )
@@ -29,7 +29,7 @@ def test_reachability_chain_diamond_cycle(spark):
     edges = spark.createDataFrame(edges_rows, "src string, dst string")
     targets = spark.createDataFrame([("E",), ("Y",), ("T",)], "t string")
     reach = {(r.seed, r.node) for r in
-             reachability_from_targets(edges, targets).collect()}
+             reachable_from(edges, targets, src="dst", dst="src").collect()}
     assert ("E", "A") in reach  # depth-4 chain
     assert ("Y", "X") in reach  # diamond (once, via distinct)
     assert ("T", "C1") in reach  # through the cycle, terminates

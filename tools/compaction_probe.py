@@ -9,11 +9,12 @@ the post-compaction row; paste into docs/SCALE.md.
 
 from __future__ import annotations
 
+import os
 import random
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _docs(spark, ids, seed):

@@ -32,7 +32,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # (label, master, shuffle_partitions|None, driver_mem|None)
 # None means "leave at Spark's default" — the vanilla row is the
@@ -51,8 +52,6 @@ CONFIGS = [
 
 _CHILD = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
 label, master, sp, mem, sf_dir, qname = sys.argv[1:7]
 from pyspark.sql import SparkSession
 b = SparkSession.builder.appName("als-env-sweep-" + label)
@@ -111,8 +110,8 @@ def main() -> int:
     # Spark's python workers resolve imports from PYTHONPATH/cwd, not
     # from the driver's sys.path inserts — run from the repo root and
     # export it so executors can unpickle package functions.
-    env["PYTHONPATH"] = "/root/repo:/root/repo/tools:" + env.get(
-        "PYTHONPATH", ""
+    env["PYTHONPATH"] = os.pathsep.join(
+        [ROOT, os.path.join(ROOT, "tools"), env.get("PYTHONPATH", "")]
     )
     for label, master, sp, mem in CONFIGS:
         t0 = time.time()
@@ -122,7 +121,7 @@ def main() -> int:
                 master or "-", sp or "-", mem or "-", sf_dir, qname,
             ],
             capture_output=True, text=True, env=env,
-            cwd="/root/repo", timeout=900,
+            cwd=ROOT, timeout=900,
         )
         line = next(
             (

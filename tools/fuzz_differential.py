@@ -14,12 +14,13 @@ Usage: python tools/fuzz_differential.py [n_queries] [seed] [sf_dir]
 
 from __future__ import annotations
 
+import os
 import random
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = {
     "lineitem": {

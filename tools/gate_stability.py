@@ -26,12 +26,13 @@ Usage: python tools/gate_stability.py [sf_dir] [--n N] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from check import TABLES, normalize  # noqa: E402
 

@@ -5,7 +5,7 @@ Usage::
 
     python tools/profile_query.py [--sf DIR] [--runs N] [--plans OUTDIR] q1 q2 ...
 
-Methodology matches bench.py (same warmup, same noop sink, min-of-N wall
+Methodology matches bench.py (its ``warmup``, same noop sink, min-of-N wall
 seconds) so numbers here are comparable to the bench headline. Plans are
 written to ``OUTDIR/<query>.txt`` when ``--plans`` is given — the
 round-15 evidence convention is ``plans/r15/<query>_before.txt`` /
@@ -35,10 +35,8 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as e
+    from bench import warmup
     from collection_templates_spark.session import get_spark
-    from collection_templates_spark.sources.testdata import load_table, load_tables
-
-    from pyspark.sql import functions as F
 
     spark = get_spark("profile")
     qs = e.queries()
@@ -46,17 +44,7 @@ def main() -> None:
     if missing:
         raise SystemExit(f"unknown queries: {missing}")
 
-    # bench.py's warmup, verbatim in spirit: JVM + parquet + Arrow workers
-    for df in load_tables(spark, args.sf).values():
-        df.schema
-    load_table(spark, "lineitem", args.sf).groupBy("l_returnflag").count().collect()
-    load_table(spark, "documents", args.sf).agg(F.sum(F.length("text"))).collect()
-    load_table(spark, "embeddings", args.sf).limit(64).agg(F.count("*")).collect()
-    from collection_templates_spark.functions.udfs import suffix_stem_udf
-
-    spark.range(0, 1024, 1, 8).select(
-        suffix_stem_udf(F.col("id").cast("string")).alias("s")
-    ).write.format("noop").mode("overwrite").save()
+    warmup(spark, args.sf)
 
     out: dict[str, list[float]] = {}
     for name in args.queries:

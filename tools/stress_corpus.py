@@ -27,11 +27,12 @@ Usage: python tools/stress_corpus.py [n_docs] [seed]
 from __future__ import annotations
 
 import json
+import os
 import random
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def build_corpus(n_docs: int, seed: int):

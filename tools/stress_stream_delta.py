@@ -18,12 +18,13 @@ Exit 0 on equality, 1 on divergence.
 
 from __future__ import annotations
 
+import os
 import random
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 VOCAB = (
     "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo "

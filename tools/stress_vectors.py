@@ -18,12 +18,13 @@ Usage: python tools/stress_vectors.py [n_vectors] [dim] [seed]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
