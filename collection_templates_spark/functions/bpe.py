@@ -175,9 +175,7 @@ def bpe_tokenize(
             "word"
         ),
     ).filter(F.col("word") != "")
-    pieced = compute_on_distinct(
-        exploded, "word", fn=n_pieces_udf, out_col="n_p"
-    )
+    pieced = compute_on_distinct(exploded, "word", n_pieces_udf, "n_p")
     return (
         pieced.groupBy("doc")
         .agg(

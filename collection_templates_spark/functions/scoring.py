@@ -1,6 +1,7 @@
 """Ranking / scoring scalar functions (SURVEY §2.7 F5-F10).
 
-- member sort key  (F5, create_merged.py:884-886)
+- member sort key  (F5, create_merged.py:884-886) and the ordered-collect
+  aggregate every stage regroups its arrays with
 - rank clamps      (F6, create_merged.py:871, :966-977; MIN_VALUE 1e-8 :41)
 - avatar emoji / banner image deterministic-random choice (F7/F8,
   create_merged.py:849-856, :898-899) — CPython's ``random.seed(str)``
@@ -27,6 +28,17 @@ MIN_VALUE = 1e-8  # create_merged.py:41
 def member_sort_key(rank: Column, curated: Column) -> Column:
     """log2(rank+1) / max(len(curated), 10) — the canonical display order."""
     return F.log2(rank + F.lit(1)) / F.greatest(F.length(curated), F.lit(10))
+
+
+def ordered_list(value: Column, *order: Column) -> Column:
+    """Aggregate: ``collect_list(value)`` ordered by ``order`` ascending,
+    ties broken by the value itself; null values are dropped, as
+    ``collect_list`` drops them."""
+    keys = [o.alias(f"k{i}") for i, o in enumerate(order)]
+    pairs = F.collect_list(
+        F.when(value.isNotNull(), F.struct(*keys, value.alias("v")))
+    )
+    return F.transform(F.array_sort(pairs), lambda s: s["v"])
 
 
 def clamp_min(col: Column, minimum: float = MIN_VALUE) -> Column:

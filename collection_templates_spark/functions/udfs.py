@@ -8,6 +8,8 @@ through ``compute_on_distinct`` first.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -209,11 +211,15 @@ def banner_image_udf(s: pd.Series) -> pd.Series:
 
 
 def compute_on_distinct(
-    df: DataFrame, in_col: str, udf: Column | None = None, fn=None, out_col: str = "___out"
+    df: DataFrame, in_col: str, fn: Callable[[Column], Column], out_col: str
 ) -> DataFrame:
-    """Apply an expensive function to DISTINCT values of ``in_col`` and join
-    the result back (broadcast when small). ``udf`` is a ready column
-    expression over column "v"; returns df + ``out_col``.
+    """Apply an expensive function to DISTINCT values of ``in_col`` (a
+    column name, nested ``"m.curated"`` included) and join the result back
+    (broadcast when small); returns ``df`` plus ``out_col``.
+
+    ``fn`` builds the compute column from the input column (a pandas UDF
+    is such a function). The join is a plain equality, so a null input
+    always gets a null output.
 
     The reference memoizes per-process in RocksDB; here distinctness IS the
     cache, and the compute parallelizes over the cluster.
@@ -224,15 +230,10 @@ def compute_on_distinct(
     Python) compute on a single core. Same measured pathology as the
     factory's namehash stage (42s → 1.9s once spread).
     """
-    assert udf is not None or fn is not None
-    spark = df.sparkSession
-    distinct = (
-        df.select(F.col(in_col).alias("v"))
+    computed = (
+        df.select(F.col(in_col).alias("___v"))
         .distinct()
-        .repartition(spark.sparkContext.defaultParallelism)
+        .repartition(df.sparkSession.sparkContext.defaultParallelism)
+        .select("___v", fn(F.col("___v")).alias(out_col))
     )
-    expr = udf if udf is not None else fn(F.col("v"))
-    computed = distinct.select("v", expr.alias(out_col))
-    return df.join(
-        computed, df[in_col].eqNullSafe(computed["v"]), "left"
-    ).drop("v")
+    return df.join(computed, F.col(in_col) == F.col("___v"), "left").drop("___v")

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
+from collection_templates_spark.functions.scoring import ordered_list
+
 try:  # pragma: no cover
     import wordninja  # type: ignore
 
@@ -189,24 +191,15 @@ def prepare_custom_collections(
     members = sort_members(members, commands)
 
     grouped = members.groupBy("collection_id").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("sorted_pos").alias("sp"),
-                        F.struct(
-                            F.col("normalized").alias("normalized_name"),
-                            F.col("tokenized").alias("tokenized_name"),
-                            F.col("interesting_score").alias(
-                                "system_interesting_score"
-                            ),
-                            F.col("status").alias("cached_status"),
-                            F.col("nh").alias("namehash"),
-                        ).alias("t"),
-                    )
-                )
+        ordered_list(
+            F.struct(
+                F.col("normalized").alias("normalized_name"),
+                F.col("tokenized").alias("tokenized_name"),
+                F.col("interesting_score").alias("system_interesting_score"),
+                F.col("status").alias("cached_status"),
+                F.col("nh").alias("namehash"),
             ),
-            lambda s: s["t"],
+            F.col("sorted_pos"),
         ).alias("tnames")
     )
 

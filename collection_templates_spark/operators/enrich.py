@@ -3,7 +3,7 @@
 Reference: airflow/dags/create_merged.py:383-482 ``compute_all_info`` — a
 RocksDB-lookup loop per collection; here each lookup class is a join
 (SURVEY §2.3 J7-J10) and each memoized Python function runs once per
-distinct input (Opt-6):
+distinct input (Opt-6, ``udfs.compute_on_distinct``):
 
 - member curation (F3) on distinct member titles, db5-label fallback (J9)
 - qrank left-join, default 0 (J7) for both members and collections
@@ -20,13 +20,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
-from collection_templates_spark.functions.scoring import member_sort_key
+from collection_templates_spark.functions.scoring import member_sort_key, ordered_list
 from collection_templates_spark.functions.udfs import (
+    compute_on_distinct,
     curate_member_udf,
     curate_name_udf,
     interesting_score_udf,
 )
+from collection_templates_spark.operators.cache_tables import (
+    apply_cached,
+    refresh_cache,
+)
+from collection_templates_spark.schemas import MEMBER_SCHEMA, TYPE_SCHEMA
 
 
 def _unquote(col: F.Column) -> F.Column:
@@ -43,19 +50,6 @@ def _unquote(col: F.Column) -> F.Column:
         F.regexp_replace(col, "\\+", "%2B"), "%(?![0-9A-Fa-f]{2})", "%25"
     )
     return F.coalesce(F.try_url_decode(escaped), col)
-
-
-def _curate_distinct(titles: DataFrame, col: str) -> DataFrame:
-    """(value → struct(curated, tokenized)) computed once per distinct."""
-    # repartition between distinct and the pandas UDF: AQE coalesces by
-    # bytes and would serialize the CPU-bound curation on one core (the
-    # repo's r4 rule; same fix as search.py / factory.py)
-    return (
-        titles.select(F.col(col).alias("v"))
-        .distinct()
-        .repartition(titles.sparkSession.sparkContext.defaultParallelism)
-        .select("v", curate_member_udf("v").alias("c"))
-    )
 
 
 def enrich_members(
@@ -84,21 +78,17 @@ def enrich_members(
     ).select("item", F.col("mm.qid").alias("member_qid"), F.col("mm.title").alias("member_title"))
 
     # primary curation on the member title
-    cur1 = _curate_distinct(m, "member_title")
-    m = m.join(cur1, m.member_title == cur1.v, "left").drop("v").withColumnRenamed(
-        "c", "c1"
-    )
+    m = compute_on_distinct(m, "member_title", curate_member_udf, "c1")
 
     # fallback: curate the db5 label when the title fails (J9). NB the
     # curate UDF returns a struct with NULL fields on failure (not a null
     # struct), so failure is detected on c1.curated.
     failed1 = F.col("c1").isNull() | F.col("c1.curated").isNull()
     labels = db5.select(F.col("id").alias("member_qid"), F.col("label"))
-    m = m.join(labels, "member_qid", "left")
-    cur2 = _curate_distinct(m.filter(failed1), "label")
-    m = m.join(cur2, m.label.eqNullSafe(cur2.v), "left").drop("v").withColumnRenamed(
-        "c", "c2"
+    m = m.join(labels, "member_qid", "left").withColumn(
+        "___fb", F.when(failed1, F.col("label"))
     )
+    m = compute_on_distinct(m, "___fb", curate_member_udf, "c2")
     m = m.withColumn(
         "c", F.when(~failed1, F.col("c1")).otherwise(F.col("c2"))
     ).filter(F.col("c").isNotNull() & F.col("c.curated").isNotNull())
@@ -109,30 +99,21 @@ def enrich_members(
     m = m.join(q, "member_qid", "left").withColumn(
         "rank", F.coalesce("___r", F.lit(0)).cast("long")
     )
+    score_udf = score_udf or interesting_score_udf
     if score_cache_path:
         # Opt-6 across runs: the persisted score cache is refreshed with
         # only the labels unseen so far (the reference's interesting-score
         # RocksDB cache, its 11h52m long pole, as an incremental table)
-        from collection_templates_spark.operators.cache_tables import refresh_cache
-
         cache = refresh_cache(
             m.sparkSession,
             score_cache_path,
             m.select(F.col("c.curated").alias("curated")),
             "curated",
-            lambda k: (score_udf or interesting_score_udf)(k),
+            score_udf,
         )
-        score = cache.select(
-            F.col("key").alias("v"), F.col("value").alias("___score")
-        )
+        m = apply_cached(m, cache, "c.curated", "___score")
     else:
-        score = (
-            m.select(F.col("c.curated").alias("v"))
-            .distinct()
-            .repartition(m.sparkSession.sparkContext.defaultParallelism)
-            .select("v", (score_udf or interesting_score_udf)("v").alias("___score"))
-        )
-    m = m.join(score, m["c.curated"] == score.v, "left").drop("v")
+        m = compute_on_distinct(m, "c.curated", score_udf, "___score")
     d = domains.select(F.col("name").alias("___dn"), F.col("status"))
     m = m.join(d, m["c.curated"] == F.col("___dn"), "left")
     return m.select(
@@ -164,18 +145,9 @@ def assemble_members(member_rows: DataFrame) -> DataFrame:
         .filter(F.col("rn") == 1)
     )
     return rows.groupBy("item").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        (-F.col("key")).alias("negkey"),
-                        F.col("member.curated").alias("tie"),
-                        F.col("member").alias("m"),
-                    )
-                )
-            ),
-            lambda s: s["m"],
-        ).alias("members")
+        ordered_list(F.col("member"), -F.col("key"), F.col("member.curated")).alias(
+            "members"
+        )
     )
 
 
@@ -184,14 +156,14 @@ def enrich_collections(
     db5: DataFrame,
     qrank: DataFrame,
     domains: DataFrame,
-    mapping_titles: DataFrame | None = None,
+    mapping_titles: DataFrame,
     score_cache_path: str | None = None,
     score_udf=None,
 ) -> DataFrame:
     """Full all-info stage → COLLECTION_SCHEMA rows.
 
     mapping_titles: (qid, title) INCLUDING redirects — the keyword source
-    (J10). When None, keywords fall back to the db5 label only.
+    (J10).
     score_cache_path: optional persisted interesting-score cache (Opt-6).
     """
     members = assemble_members(
@@ -204,13 +176,7 @@ def enrich_collections(
         "item", "type", "article", "valid_members_count", "invalid_members_count"
     )
     # collection name (F1) on distinct articles
-    names = (
-        coll.select(F.col("article").alias("v"))
-        .distinct()
-        .repartition(coll.sparkSession.sparkContext.defaultParallelism)
-        .select("v", curate_name_udf("v").alias("___name"))
-    )
-    coll = coll.join(names, coll.article == names.v, "left").drop("v")
+    coll = compute_on_distinct(coll, "article", curate_name_udf, "___name")
 
     # type labels (J9): explode type ids, left join db5 label, regroup
     types = (
@@ -234,7 +200,6 @@ def enrich_collections(
     # db5 aux data for the collection itself (J9)
     aux = db5.select(
         F.col("id").alias("item"),
-        F.col("label").alias("___label"),
         F.col("description").alias("___desc"),
         F.col("image").alias("___image"),
         F.col("page_banner").alias("___banner"),
@@ -247,21 +212,11 @@ def enrich_collections(
 
     # keywords (J10): all titles for the QID (redirects included), curated,
     # minus the collection's own name
-    if mapping_titles is not None:
-        kw_src = mapping_titles.select(
-            F.col("qid").alias("item"), F.col("title").alias("kw")
-        )
-    else:
-        kw_src = aux.select("item", F.col("___label").alias("kw"))
-    kw_cur = (
-        kw_src.select(F.col("kw").alias("v"))
-        .distinct()
-        .repartition(kw_src.sparkSession.sparkContext.defaultParallelism)
-        .select("v", curate_name_udf("v").alias("kwc"))
+    kw_src = mapping_titles.select(
+        F.col("qid").alias("item"), F.col("title").alias("kw")
     )
     keywords = (
-        kw_src.join(kw_cur, kw_src.kw == kw_cur.v, "left")
-        .filter(F.col("kwc").isNotNull())
+        compute_on_distinct(kw_src, "kw", curate_name_udf, "kwc")
         .groupBy("item")
         .agg(F.array_sort(F.collect_list("kwc")).alias("___kws"))
     )
@@ -272,22 +227,15 @@ def enrich_collections(
 
     out = coll.join(members, "item", "left").select(
         "item",
-        F.coalesce("types", F.array().cast("array<struct<id:string,label:string>>")).alias("types"),
+        F.coalesce("types", F.array().cast(ArrayType(TYPE_SCHEMA))).alias("types"),
         "article",
         F.col("___name").alias("name"),
-        F.coalesce(
-            "members",
-            F.array().cast(
-                "array<struct<curated:string,tokenized:array<string>,"
-                "interesting_score:double,rank:bigint,status:string>>"
-            ),
-        ).alias("members"),
+        F.coalesce("members", F.array().cast(ArrayType(MEMBER_SCHEMA))).alias("members"),
         "valid_members_count",
         "invalid_members_count",
-        F.coalesce(
-            F.array_remove(F.coalesce("___kws", F.array().cast("array<string>")), ""),
-            F.array().cast("array<string>"),
-        ).alias("keywords"),
+        F.array_remove(F.coalesce("___kws", F.array().cast("array<string>")), "").alias(
+            "keywords"
+        ),
         desc.alias("description"),
         F.transform(
             F.coalesce("___image", F.array().cast("array<string>")), _unquote

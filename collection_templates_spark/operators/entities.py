@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from collection_templates_spark.functions.scoring import ordered_list
 from collection_templates_spark.sources.ntriples import PREDICATES_ONE
 
 # store → predicate subset (reference create_kv.py:27-35)
@@ -39,15 +40,10 @@ def _single(pred: str) -> F.Column:
 
 
 def _multi(pred: str) -> F.Column:
-    """Input-order multi-value accumulation (create_kv.py:121-125):
-    collect (pos, object), sort by pos, project object."""
-    pairs = F.collect_list(
-        F.when(
-            F.col("predicate") == pred,
-            F.struct(F.col("pos").alias("pos"), F.col("object").alias("obj")),
-        )
-    )
-    return F.transform(F.array_sort(pairs), lambda s: s["obj"]).alias(pred)
+    """Input-order multi-value accumulation (create_kv.py:121-125)."""
+    return ordered_list(
+        F.when(F.col("predicate") == pred, F.col("object")), F.col("pos")
+    ).alias(pred)
 
 
 def build_entity_table(triples: DataFrame, predicates: tuple[str, ...]) -> DataFrame:

@@ -21,8 +21,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from collection_templates_spark.functions.scoring import MIN_VALUE, member_sort_key
+from collection_templates_spark.functions.scoring import (
+    clamp_min,
+    member_sort_key,
+    ordered_list,
+)
 from collection_templates_spark.functions.udfs import (
+    compute_on_distinct,
     log_probability_udf,
     namehash_udf,
 )
@@ -126,45 +131,24 @@ def collection_factory(
         ),
     )
 
-    # namehash over distinct curated labels (Opt-6), joined back as a map.
-    # The explicit repartition matters: the distinct's shuffle output is
-    # tiny in BYTES, so AQE coalesces it to one partition — which would
-    # serialize the CPU-bound keccak UDF on a single core (measured with
-    # the batch keccak: the factory stage is 42s coalesced+scalar → 1.9s
-    # spread+batched at 16k labels).
-    labels = (
-        df.select(
-            F.explode(F.transform("members", lambda m: m["curated"])).alias("v")
-        )
-        .distinct()
-        .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    )
-    hashes = labels.select("v", namehash_udf(F.concat("v", F.lit(".eth"))).alias("h"))
-    exploded = (
-        df.select("item", F.posexplode("members").alias("p", "m"))
-        .join(hashes, F.col("m.curated") == F.col("v"), "left")
-        .drop("v")
+    # namehash over distinct curated labels (Opt-6)
+    exploded = compute_on_distinct(
+        df.select("item", F.posexplode("members").alias("p", "m")),
+        "m.curated",
+        lambda v: namehash_udf(F.concat(v, F.lit(".eth"))),
+        "h",
     )
     template_names = exploded.groupBy("item").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("p").alias("p"),
-                        F.struct(
-                            F.col("m.curated").alias("normalized_name"),
-                            F.col("m.tokenized").alias("tokenized_name"),
-                            F.col("m.interesting_score").alias(
-                                "system_interesting_score"
-                            ),
-                            F.col("m.rank").alias("rank"),
-                            F.col("m.status").alias("cached_status"),
-                            F.col("h").alias("namehash"),
-                        ).alias("t"),
-                    )
-                )
+        ordered_list(
+            F.struct(
+                F.col("m.curated").alias("normalized_name"),
+                F.col("m.tokenized").alias("tokenized_name"),
+                F.col("m.interesting_score").alias("system_interesting_score"),
+                F.col("m.rank").alias("rank"),
+                F.col("m.status").alias("cached_status"),
+                F.col("h").alias("namehash"),
             ),
-            lambda s: s["t"],
+            F.col("p"),
         ).alias("___tnames")
     )
     df = df.join(template_names, "item", "left")
@@ -235,14 +219,10 @@ def collection_factory(
             F.col("___tnames").alias("names"),
             F.slice(F.coalesce("___tnames", F.array()), 1, 10).alias("top10_names"),
             F.slice(F.coalesce("___tnames", F.array()), 1, 25).alias("top25_names"),
-            F.greatest(_mean(ranks), F.lit(MIN_VALUE)).alias("members_rank_mean"),
-            F.greatest(_exact_median(ranks), F.lit(MIN_VALUE)).alias(
-                "members_rank_median"
-            ),
-            F.greatest(_mean(scores), F.lit(MIN_VALUE)).alias(
-                "members_system_interesting_score_mean"
-            ),
-            F.greatest(_exact_median(scores), F.lit(MIN_VALUE)).alias(
+            clamp_min(_mean(ranks)).alias("members_rank_mean"),
+            clamp_min(_exact_median(ranks)).alias("members_rank_median"),
+            clamp_min(_mean(scores)).alias("members_system_interesting_score_mean"),
+            clamp_min(_exact_median(scores)).alias(
                 "members_system_interesting_score_median"
             ),
             F.col("valid_members_count"),
@@ -255,9 +235,9 @@ def collection_factory(
             .otherwise(F.lit(0.0))
             .alias("valid_members_ratio"),
             nonavailable.cast("long").alias("nonavailable_members_count"),
-            F.greatest(
-                F.when(n_members > 0, nonavailable / n_members), F.lit(MIN_VALUE)
-            ).alias("nonavailable_members_ratio"),
+            clamp_min(F.when(n_members > 0, nonavailable / n_members)).alias(
+                "nonavailable_members_ratio"
+            ),
             F.coalesce("is_merged", F.lit(False)).alias("is_merged"),
             _status_count(members, "available").cast("long").alias("available_count"),
             _status_count(members, "taken").cast("long").alias("taken_count"),

@@ -21,6 +21,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
+
+from collection_templates_spark.functions.scoring import ordered_list
+from collection_templates_spark.schemas import MEMBER_SCHEMA, TYPE_SCHEMA
 
 # Wikimedia-internal types that disqualify a collection (P7,
 # create_merged.py:579-592)
@@ -96,40 +100,15 @@ def merge_groups(df: DataFrame, group_col: str = "merge_key") -> DataFrame:
         .filter(F.col("rn") == 1)
         .groupBy(group_col)
         .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            (-F.col("member.rank")).alias("negrank"),
-                            F.col("___ord").alias("o"),
-                            F.col("mpos").alias("p"),
-                            F.col("member").alias("m"),
-                        )
-                    )
-                ),
-                lambda s: s["m"],
+            ordered_list(
+                F.col("member"), -F.col("member.rank"), F.col("___ord"), F.col("mpos")
             ).alias("members")
         )
     )
 
     kw = df.select(group_col, "___ord", F.posexplode_outer("keywords").alias("kpos", "kw"))
-    merged_kw = (
-        kw.filter(F.col("kw").isNotNull())
-        .groupBy(group_col)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("___ord").alias("o"),
-                            F.col("kpos").alias("p"),
-                            F.col("kw").alias("k"),
-                        )
-                    )
-                ),
-                lambda s: s["k"],
-            ).alias("keywords")
-        )
+    merged_kw = kw.groupBy(group_col).agg(
+        ordered_list(F.col("kw"), F.col("___ord"), F.col("kpos")).alias("keywords")
     )
 
     ty = df.select(group_col, F.explode_outer("types").alias("t"))
@@ -177,9 +156,9 @@ def merge_groups(df: DataFrame, group_col: str = "merge_key") -> DataFrame:
         head.join(merged_members, group_col, "left")
         .join(merged_kw, group_col, "left")
         .join(merged_ty, group_col, "left")
-        .withColumn("members", F.coalesce("members", F.array().cast("array<struct<curated:string,tokenized:array<string>,interesting_score:double,rank:bigint,status:string>>")))
+        .withColumn("members", F.coalesce("members", F.array().cast(ArrayType(MEMBER_SCHEMA))))
         .withColumn("keywords", F.coalesce("keywords", F.array().cast("array<string>")))
-        .withColumn("types", F.coalesce("types", F.array().cast("array<struct<id:string,label:string>>")))
+        .withColumn("types", F.coalesce("types", F.array().cast(ArrayType(TYPE_SCHEMA))))
     )
 
 
@@ -192,10 +171,8 @@ def merge_lists_and_categories(
     Deviation from the reference's file-order "first match": the matching
     list with the smallest numeric QID wins (deterministic).
     """
-    lists = apply_collection_filters(lists).withColumn("___role", F.lit("list"))
-    categories = apply_collection_filters(categories).withColumn(
-        "___role", F.lit("category")
-    )
+    lists = apply_collection_filters(lists)
+    categories = apply_collection_filters(categories)
 
     # db4 edges normalized to (category_item, list_item)
     e1 = db4.select(
@@ -243,8 +220,7 @@ def merge_lists_and_categories(
         "merge_key", F.coalesce("___target", F.col("item"))
     ).withColumn("merge_rank", F.lit(1)).drop("___target")
 
-    together = lists.unionByName(cats).drop("___role")
-    return merge_groups(together, "merge_key").drop("merge_key", "merge_rank")
+    return merge_groups(lists.unionByName(cats), "merge_key").drop("merge_key")
 
 
 # --- letter-range normalization (A9, create_merged.py:717-804) -------------
@@ -269,8 +245,19 @@ ALPHABET_RANGE_PATTERN = r"^[^A-Za-z]*[A-Za-z]( ?[-–] ?[A-Za-z])?[^A-Za-z]*$"
 def _ucfirst(col: F.Column) -> F.Column:
     return F.when(
         F.length(col) > 0,
-        F.concat(F.upper(F.substring(col, 1, 1)), F.expr(f"substring({'___nn'}, 2)")),
+        F.concat(F.upper(F.substring(col, 1, 1)), F.substr(col, F.lit(2))),
     ).otherwise(col)
+
+
+def _merge_named(df: DataFrame, key: str) -> DataFrame:
+    """Merge each group of rows sharing ``key`` into one collection named
+    by that key (fold order: numeric QID)."""
+    keyed = df.withColumn("merge_key", F.col(key)).withColumn("merge_rank", F.lit(0))
+    return (
+        merge_groups(keyed, "merge_key")
+        .withColumn("name", F.col("merge_key"))
+        .drop("merge_key")
+    )
 
 
 def remove_collections_with_letters(df: DataFrame) -> DataFrame:
@@ -305,18 +292,7 @@ def remove_collections_with_letters(df: DataFrame) -> DataFrame:
     cand = cand.withColumn("___groupn", F.count("*").over(w))
 
     # groups > 1 → merge + rename to the normalized name
-    groups = cand.filter(F.col("___groupn") > 1)
-    merged = (
-        merge_groups(
-            groups.withColumn("merge_key", F.col("___nn")).withColumn(
-                "merge_rank", F.lit(0)
-            ),
-            "merge_key",
-        )
-        .withColumnRenamed("merge_key", "___nn")
-        .withColumn("name", F.col("___nn"))
-        .drop("___nn", "merge_rank")
-    )
+    merged = _merge_named(cand.filter(F.col("___groupn") > 1), "___nn")
 
     # singletons: rename only on m2/m3 or alphabet-range m1 strips
     singles = cand.filter(F.col("___groupn") == 1)
@@ -338,14 +314,5 @@ def remove_duplicates(df: DataFrame) -> DataFrame:
     w = Window.partitionBy("name")
     df = df.withColumn("___n", F.count("*").over(w))
     uniq = df.filter(F.col("___n") == 1).drop("___n")
-    dups = (
-        merge_groups(
-            df.filter(F.col("___n") > 1)
-            .withColumn("merge_key", F.col("name"))
-            .withColumn("merge_rank", F.lit(0)),
-            "merge_key",
-        )
-        .withColumn("name", F.col("merge_key"))
-        .drop("merge_key", "merge_rank", "___n")
-    )
+    dups = _merge_named(df.filter(F.col("___n") > 1), "name")
     return uniq.unionByName(dups.select(*uniq.columns))

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from collection_templates_spark.functions.scoring import ordered_list
+
 
 def related_collections(
     colls: DataFrame,
@@ -110,20 +112,13 @@ def related_collections(
         F.col("rn") <= max_related
     )
     return top.groupBy(F.col("src").alias("item")).agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("rn").alias("rn"),
-                        F.struct(
-                            F.col("dst").alias("id"),
-                            F.col("dst_name").alias("name"),
-                            F.col("score").alias("score"),
-                        ).alias("r"),
-                    )
-                )
+        ordered_list(
+            F.struct(
+                F.col("dst").alias("id"),
+                F.col("dst_name").alias("name"),
+                F.col("score").alias("score"),
             ),
-            lambda s: s["r"],
+            F.col("rn"),
         ).alias("related")
     )
 

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from collection_templates_spark.functions.scoring import ordered_list
+
 
 def as_of_join(
     left: DataFrame,
@@ -1359,14 +1361,8 @@ def sax_words(
         .agg(
             F.max("n").alias("n_points"),
             F.count(F.lit(1)).alias("n_segments"),
-            F.concat_ws(
-                "",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("seg", "sym"))
-                    ),
-                    lambda s: s.sym,
-                ),
-            ).alias("sax_word"),
+            F.concat_ws("", ordered_list(F.col("sym"), F.col("seg"))).alias(
+                "sax_word"
+            ),
         )
     )

@@ -184,7 +184,6 @@ def run_pipeline(
     return {
         "triples": triples,
         "stores": stores,
-        "validated": {m: out[m] for m in out},
         "merged_final": docs,
         "operations": ops,
         "___stage_seconds": stage_seconds,

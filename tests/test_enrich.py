@@ -1,5 +1,5 @@
 """Enrichment-stage unit tests (J7-J10), incl. the J9 label fallback that
-the e2e slice doesn't reach."""
+the e2e slice doesn't reach and the J10 keywords."""
 
 from pyspark.sql import functions as F
 
@@ -46,6 +46,10 @@ def _db5(spark):
     )
 
 
+def _no_titles(spark):
+    return spark.createDataFrame([], "qid string, title string")
+
+
 def test_label_fallback_and_ranks(spark):
     qrank = spark.createDataFrame(
         [("M1", 50), ("M2", 900), ("Q1", 7)], "id string, rank bigint"
@@ -53,7 +57,9 @@ def test_label_fallback_and_ranks(spark):
     domains = spark.createDataFrame(
         [("rescuedlabel", "taken")], "name string, status string"
     )
-    out = enrich_collections(_validated(spark), _db5(spark), qrank, domains)
+    out = enrich_collections(
+        _validated(spark), _db5(spark), qrank, domains, _no_titles(spark)
+    )
     rows = out.collect()
     assert len(rows) == 1
     c = rows[0]
@@ -89,7 +95,9 @@ def test_image_urls_unquoted(spark):
     )
     qrank = spark.createDataFrame([], "id string, rank bigint")
     domains = spark.createDataFrame([], "name string, status string")
-    c = enrich_collections(validated, db5, qrank, domains).collect()[0]
+    c = enrich_collections(
+        validated, db5, qrank, domains, _no_titles(spark)
+    ).collect()[0]
     # urllib.parse.unquote semantics: %20 decodes, '+' survives, malformed
     # % passes through as a literal even when valid escapes surround it,
     # and invalid-UTF-8 escapes become U+FFFD — all matching Python.
@@ -108,3 +116,40 @@ def test_member_rank_defaults_zero(spark):
     domains = spark.createDataFrame([], "name string, status string")
     rows = enrich_members(_validated(spark), _db5(spark), qrank, domains).collect()
     assert all(r.member.rank == 0 for r in rows)
+
+
+def test_keywords_from_mapping_titles(spark):
+    """J10: every title of the collection's QID (redirects included),
+    curated with curate_name, sorted, minus the collection's own name."""
+    validated = spark.createDataFrame(
+        [
+            ("Q1", [], "Category:Things", [], 0, 0),
+            ("Q2", [], "Category:Empty", [], 0, 0),
+        ],
+        "item string, type array<string>, article string,"
+        " members array<struct<qid:string,title:string>>,"
+        " valid_members_count bigint, invalid_members_count bigint",
+    )
+    titles = spark.createDataFrame(
+        [
+            ("Q1", "Category:Things"),  # the primary title: its own name
+            ("Q1", "apple_pie"),
+            ("Q1", "List of zebras"),  # a redirect title
+            ("Q9", "Leaked one"),  # Q9 is not a collection
+        ],
+        "qid string, title string",
+    )
+    db5 = spark.createDataFrame(
+        [], "id string, label string, description string,"
+        " image array<string>, page_banner array<string>"
+    )
+    qrank = spark.createDataFrame([], "id string, rank bigint")
+    domains = spark.createDataFrame([], "name string, status string")
+    out = {
+        r.item: r
+        for r in enrich_collections(validated, db5, qrank, domains, titles).collect()
+    }
+    assert set(out) == {"Q1", "Q2"}
+    assert out["Q1"].name == "Things"
+    assert out["Q1"].keywords == ["Apple pie", "Zebras"]
+    assert out["Q2"].keywords == []
