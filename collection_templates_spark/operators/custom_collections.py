@@ -158,20 +158,24 @@ def prepare_custom_collections(
     (udfs.interesting_score_udf_for / tokenize_name_udf_for); defaults are
     the documented stub score and the wordninja-or-identity tokenizer."""
     from collection_templates_spark.functions.udfs import (
+        compute_on_distinct,
         interesting_score_udf,
         namehash_udf,
     )
     from collection_templates_spark.operators.factory import banner_udf
 
     members = prepare_members(raw, tokenize_udf=tokenize_udf)
-    # per-member enrichment: score (distinct), status, namehash (distinct)
-    distinct = members.select(F.col("normalized").alias("v")).distinct()
-    scored = distinct.select(
-        "v",
-        (score_udf or interesting_score_udf)("v").alias("score"),
-        namehash_udf(F.concat("v", F.lit(".eth"))).alias("nh"),
+    # per-member enrichment: score and namehash (on distinct labels), status
+    members = compute_on_distinct(
+        members,
+        "normalized",
+        lambda v: F.struct(
+            (score_udf or interesting_score_udf)(v).alias("score"),
+            namehash_udf(F.concat(v, F.lit(".eth"))).alias("nh"),
+        ),
+        "___e",
     )
-    members = members.join(scored, members.normalized == scored.v, "left").drop("v")
+    members = members.select("*", "___e.score", "___e.nh").drop("___e")
     d = domains.select(F.col("name").alias("___dn"), F.col("status"))
     members = members.join(d, members.normalized == F.col("___dn"), "left").drop(
         "___dn"

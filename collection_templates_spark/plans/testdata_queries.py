@@ -723,34 +723,45 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every assignment cosine and every mean, so a recompute is bit-identical.
 # The driver (and bench.py) runs all queries in ONE process; training the
 # same quantizer once per dependent query is pure recompute, the same
-# reasoning as operators/cache_tables.py. Keyed by (sf_dir, embeddings
-# file fingerprint) — r5 advice: sf_dir alone would serve stale models if
-# the driver regenerated /root/testdata and re-invoked queries() within
-# the SAME process while the DuckDB oracle replays from the new parquet.
+# reasoning as operators/cache_tables.py. Keyed by the input tables' file
+# fingerprints as well as sf_dir — r5 advice: sf_dir alone would serve
+# stale models if the driver regenerated /root/testdata and re-invoked
+# queries() within the SAME process while the DuckDB oracle replays from
+# the new parquet. _INCR_INDEX_MEMO and _ANN_INDEX_MEMO (below) hold the
+# persisted-index fills; all three are filled through _memo.
 _TRAINER_MEMO: dict = {}
 
 
-def _table_fingerprint(sf_dir: str, table: str) -> tuple:
-    """Cheap content fingerprint of a testdata table: (path, mtime_ns,
-    size) per data file, walking into the directory form too."""
-    import os
+def _memo(
+    memo: dict,
+    spark: SparkSession,
+    sf_dir: str,
+    key: tuple,
+    tables: tuple,
+    fill: Callable,
+):
+    """The bank's one fill-or-hit: the entry of ``memo`` for ``key`` on
+    the current inputs, running ``fill()`` only on a miss.
 
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(p):
-        parts = sorted(
-            os.path.join(p, f)
-            for f in os.listdir(p)
-            if not f.startswith(("_", "."))
-        )
-    else:
-        parts = [p]
-    return tuple(
-        (f, os.stat(f).st_mtime_ns, os.stat(f).st_size) for f in parts
+    The full key is ``(*key, sf_dir, fingerprint of each of
+    ``tables``, applicationId)``: a regenerated table or a new session
+    misses. A miss first evicts the entries of ``memo`` from other
+    sessions — a checkpoint is unusable outside its own session, so a
+    dead session's entries only pin memory."""
+    from collection_templates_spark.sources.testdata import fingerprint
+
+    app = spark.sparkContext.applicationId
+    full = (
+        *key,
+        sf_dir,
+        *(fingerprint(os.path.join(sf_dir, f"{t}.parquet")) for t in tables),
+        app,
     )
-
-
-def _embeddings_fingerprint(sf_dir: str) -> tuple:
-    return _table_fingerprint(sf_dir, "embeddings")
+    if full not in memo:
+        for dead in [k for k in memo if k[-1] != app]:
+            del memo[dead]
+        memo[full] = fill()
+    return memo[full]
 
 
 def _memo_df(
@@ -765,20 +776,14 @@ def _memo_df(
     recall row that grades it, and — for brute force — every recall
     row), and each consumer was re-scoring the corpus. The ≤40-row
     results are memoized as eager localCheckpoints — the same
-    single-process pure-recompute reasoning as _TRAINER_MEMO, keyed
-    additionally by applicationId because a checkpointed DataFrame is
-    unusable from a different SparkSession. ``table`` names the input
-    table whose content fingerprint keys the memo (r8: the perplexity
-    family shares documents-derived frames the same way)."""
-    key = (
-        tag,
-        sf_dir,
-        _table_fingerprint(sf_dir, table),
-        spark.sparkContext.applicationId,
+    single-process pure-recompute reasoning as _TRAINER_MEMO. ``table``
+    names the input table whose content fingerprint keys the memo (r8:
+    the perplexity family shares documents-derived frames the same
+    way)."""
+    return _memo(
+        _TRAINER_MEMO, spark, sf_dir, (tag,), (table,),
+        lambda: builder().localCheckpoint(eager=True),
     )
-    if key not in _TRAINER_MEMO:
-        _TRAINER_MEMO[key] = builder().localCheckpoint(eager=True)
-    return _TRAINER_MEMO[key]
 
 
 def _perplexity_pairs_for(spark: SparkSession, sf_dir: str):
@@ -913,12 +918,10 @@ def _ivf_centroids_for(spark: SparkSession, sf_dir: str):
         train_ivf_centroids,
     )
 
-    key = ("ivf", sf_dir, _embeddings_fingerprint(sf_dir))
-    if key not in _TRAINER_MEMO:
-        _TRAINER_MEMO[key] = train_ivf_centroids(
-            _t(spark, sf_dir, "embeddings")
-        )
-    return _TRAINER_MEMO[key]
+    return _memo(
+        _TRAINER_MEMO, spark, sf_dir, ("ivf",), ("embeddings",),
+        lambda: train_ivf_centroids(_t(spark, sf_dir, "embeddings")),
+    )
 
 
 def _pq_codebooks_for(spark: SparkSession, sf_dir: str):
@@ -926,12 +929,12 @@ def _pq_codebooks_for(spark: SparkSession, sf_dir: str):
         train_pq_codebooks,
     )
 
-    key = ("pq", sf_dir, _embeddings_fingerprint(sf_dir))
-    if key not in _TRAINER_MEMO:
-        _TRAINER_MEMO[key] = train_pq_codebooks(
+    return _memo(
+        _TRAINER_MEMO, spark, sf_dir, ("pq",), ("embeddings",),
+        lambda: train_pq_codebooks(
             _t(spark, sf_dir, "embeddings"), m=16, ks=64, iterations=2
-        )
-    return _TRAINER_MEMO[key]
+        ),
+    )
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -945,21 +948,18 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_topk_for(spark, sf_dir)
 
 
-def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-visible exactness signal for the approximate ANN path (r3
-    verdict): per-query recall@5 of sign-LSH top-k against brute-force
-    cosine top-k. Fully ORACLED — the LSH hyperplanes are deterministic
-    splitmix constants embedded verbatim in the generated oracle SQL, so
-    DuckDB reproduces the identical bucketing, candidate set, rankings and
-    recall values (see _lsh_recall_oracle_sql below)."""
+def _recall_at_5(
+    spark: SparkSession, sf_dir: str, approx: DataFrame
+) -> DataFrame:
+    """Per-query recall@5 of an approximate top-5 ranking ``approx``
+    (query_id, neighbor_id, …) against the memoized brute-force cosine
+    top-5: brute ⟕ approx, hits summed per query over 5."""
     brute = _brute_topk_for(spark, sf_dir).select("query_id", "neighbor_id")
-    lsh = (
-        _lsh_topk_for(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("___hit", F.lit(1))
+    hits = approx.select("query_id", "neighbor_id").withColumn(
+        "___hit", F.lit(1)
     )
     return (
-        brute.join(lsh, ["query_id", "neighbor_id"], "left")
+        brute.join(hits, ["query_id", "neighbor_id"], "left")
         .groupBy("query_id")
         .agg(
             F.round(
@@ -967,6 +967,16 @@ def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("recall_at_5")
         )
     )
+
+
+def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Driver-visible exactness signal for the approximate ANN path (r3
+    verdict): per-query recall@5 of sign-LSH top-k against brute-force
+    cosine top-k. Fully ORACLED — the LSH hyperplanes are deterministic
+    splitmix constants embedded verbatim in the generated oracle SQL, so
+    DuckDB reproduces the identical bucketing, candidate set, rankings and
+    recall values (see _lsh_recall_oracle_sql below)."""
+    return _recall_at_5(spark, sf_dir, _lsh_topk_for(spark, sf_dir))
 
 
 def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -975,21 +985,7 @@ def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     against brute-force cosine top-k. Fully ORACLED — the deterministic
     k-means replay (see ann_ivf_topk) reproduces the identical probe
     sets, so DuckDB computes the identical recall values."""
-    brute = _brute_topk_for(spark, sf_dir).select("query_id", "neighbor_id")
-    ivf = (
-        _ivf_topk_for(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("___hit", F.lit(1))
-    )
-    return (
-        brute.join(ivf, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.round(
-                F.sum(F.coalesce(F.col("___hit"), F.lit(0))) / F.lit(5.0), 6
-            ).alias("recall_at_5")
-        )
-    )
+    return _recall_at_5(spark, sf_dir, _ivf_topk_for(spark, sf_dir))
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1027,8 +1023,7 @@ def _respq_codebooks_for(spark: SparkSession, sf_dir: str):
         train_residual_pq,
     )
 
-    key = ("respq", sf_dir, _embeddings_fingerprint(sf_dir))
-    if key not in _TRAINER_MEMO:
+    def fill():
         _, cbs = train_residual_pq(
             _t(spark, sf_dir, "embeddings"),
             n_clusters=16,
@@ -1037,8 +1032,11 @@ def _respq_codebooks_for(spark: SparkSession, sf_dir: str):
             iterations=2,
             centroids=_ivf_centroids_for(spark, sf_dir),
         )
-        _TRAINER_MEMO[key] = cbs
-    return _TRAINER_MEMO[key]
+        return cbs
+
+    return _memo(
+        _TRAINER_MEMO, spark, sf_dir, ("respq",), ("embeddings",), fill
+    )
 
 
 def ann_respq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2078,20 +2076,14 @@ def _incremental_probe_for(spark: SparkSession, sf_dir: str):
     rankings: the fill bills to the first consumer). Returns
     ``(index_path, pairs_df)`` so delta_pipeline can also exercise the
     accept-into-index append against the SAME persisted index. Memo
-    keyed like _memo_df (content fingerprint + applicationId; a
-    checkpointed frame is unusable from another session)."""
+    keyed through _memo like _memo_df."""
     from collection_templates_spark.operators.incremental_dedup import (
         build_minhash_index,
         dedup_batch_against_index,
         scratch_index_path,
     )
 
-    key = (
-        sf_dir,
-        _table_fingerprint(sf_dir, "documents"),
-        spark.sparkContext.applicationId,
-    )
-    if key not in _INCR_INDEX_MEMO:
+    def fill():
         docs = _t(spark, sf_dir, "documents")
         history = docs.filter(F.col("doc_id") % 2 == 0)
         batch = docs.filter(F.col("doc_id") % 2 == 1)
@@ -2104,8 +2096,11 @@ def _incremental_probe_for(spark: SparkSession, sf_dir: str):
         pairs = dedup_batch_against_index(
             spark, path, batch, max_bucket_size=None
         ).localCheckpoint(eager=True)
-        _INCR_INDEX_MEMO[key] = (path, pairs)
-    return _INCR_INDEX_MEMO[key]
+        return path, pairs
+
+    return _memo(
+        _INCR_INDEX_MEMO, spark, sf_dir, ("incr",), ("documents",), fill
+    )
 
 
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2209,13 +2204,7 @@ def _dedup_delete_probe_for(spark: SparkSession, sf_dir: str):
         scratch_index_path,
     )
 
-    key = (
-        sf_dir,
-        _table_fingerprint(sf_dir, "documents"),
-        spark.sparkContext.applicationId,
-        "tombstone",
-    )
-    if key not in _INCR_INDEX_MEMO:
+    def fill():
         docs = _t(spark, sf_dir, "documents")
         history = docs.filter(F.col("doc_id") % 4 == 0)
         batch = docs.filter(F.col("doc_id") % 2 == 1)
@@ -2229,8 +2218,12 @@ def _dedup_delete_probe_for(spark: SparkSession, sf_dir: str):
         pairs = dedup_batch_against_index(
             spark, path, batch, max_bucket_size=None
         ).localCheckpoint(eager=True)
-        _INCR_INDEX_MEMO[key] = (path, pairs)
-    return _INCR_INDEX_MEMO[key]
+        return path, pairs
+
+    return _memo(
+        _INCR_INDEX_MEMO, spark, sf_dir, ("incr_tombstone",),
+        ("documents",), fill,
+    )
 
 
 def dedup_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2280,21 +2273,7 @@ def ann_respq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query recall@5 of residual IVF-PQ against brute-force cosine —
     the third quantified ANN-quality signal (LSH, raw PQ, residual PQ),
     fully ORACLED via the same chained replay as ann_respq_topk."""
-    brute = _brute_topk_for(spark, sf_dir).select("query_id", "neighbor_id")
-    res = (
-        _respq_topk_for(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("___hit", F.lit(1))
-    )
-    return (
-        brute.join(res, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.round(
-                F.sum(F.coalesce(F.col("___hit"), F.lit(0))) / F.lit(5.0), 6
-            ).alias("recall_at_5")
-        )
-    )
+    return _recall_at_5(spark, sf_dir, _respq_topk_for(spark, sf_dir))
 
 
 def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2302,21 +2281,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the quantified lossy-compression signal (≈0.5 on this corpus: 96-bit
     codes over near-random 64-dim vectors is the adversarial case for
     PQ; structured production embeddings fare far better)."""
-    brute = _brute_topk_for(spark, sf_dir).select("query_id", "neighbor_id")
-    pq = (
-        _pq_topk_for(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("___hit", F.lit(1))
-    )
-    return (
-        brute.join(pq, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.round(
-                F.sum(F.coalesce(F.col("___hit"), F.lit(0))) / F.lit(5.0), 6
-            ).alias("recall_at_5")
-        )
-    )
+    return _recall_at_5(spark, sf_dir, _pq_topk_for(spark, sf_dir))
 
 
 # embedding near-dup configuration, shared with the generated oracle:
@@ -3449,20 +3414,14 @@ def _ann_index_probe_for(spark: SparkSession, sf_dir: str):
     """Shared persisted-IVF-index build + batch probe (even vec_ids
     indexed, odd vec_ids < 16 arriving as the batch) — the vector-side
     sibling of _incremental_probe_for, same memo reasoning (the fill
-    bills to the first consumer; keyed by content fingerprint +
-    applicationId)."""
+    bills to the first consumer)."""
     from collection_templates_spark.operators.incremental_ann import (
         ann_batch_against_index,
         build_ivf_index,
         scratch_ann_index_path,
     )
 
-    key = (
-        sf_dir,
-        _embeddings_fingerprint(sf_dir),
-        spark.sparkContext.applicationId,
-    )
-    if key not in _ANN_INDEX_MEMO:
+    def fill():
         emb = _t(spark, sf_dir, "embeddings")
         history = emb.filter(F.col("vec_id") % 2 == 0)
         batch = emb.filter(
@@ -3473,8 +3432,11 @@ def _ann_index_probe_for(spark: SparkSession, sf_dir: str):
         topk = ann_batch_against_index(
             spark, path, batch
         ).localCheckpoint(eager=True)
-        _ANN_INDEX_MEMO[key] = (path, topk)
-    return _ANN_INDEX_MEMO[key]
+        return path, topk
+
+    return _memo(
+        _ANN_INDEX_MEMO, spark, sf_dir, ("ann",), ("embeddings",), fill
+    )
 
 
 def ann_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3509,13 +3471,7 @@ def _ann_delete_probe_for(spark: SparkSession, sf_dir: str):
         scratch_ann_index_path,
     )
 
-    key = (
-        sf_dir,
-        _embeddings_fingerprint(sf_dir),
-        spark.sparkContext.applicationId,
-        "tombstone",
-    )
-    if key not in _ANN_INDEX_MEMO:
+    def fill():
         emb = _t(spark, sf_dir, "embeddings")
         history = emb.filter(F.col("vec_id") % 2 == 0)
         batch = emb.filter(
@@ -3531,8 +3487,12 @@ def _ann_delete_probe_for(spark: SparkSession, sf_dir: str):
         topk = ann_batch_against_index(
             spark, path, batch
         ).localCheckpoint(eager=True)
-        _ANN_INDEX_MEMO[key] = (path, topk)
-    return _ANN_INDEX_MEMO[key]
+        return path, topk
+
+    return _memo(
+        _ANN_INDEX_MEMO, spark, sf_dir, ("ann_tombstone",),
+        ("embeddings",), fill,
+    )
 
 
 def ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3829,20 +3789,9 @@ def ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    sq8 = (
-        sq8_cosine_topk(emb, emb.filter(F.col("vec_id") < 8), k=5)
-        .select("query_id", "neighbor_id")
-        .withColumn("___hit", F.lit(1))
-    )
-    brute = _brute_topk_for(spark, sf_dir).select("query_id", "neighbor_id")
-    return (
-        brute.join(sq8, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.round(
-                F.sum(F.coalesce(F.col("___hit"), F.lit(0))) / F.lit(5.0), 6
-            ).alias("recall_at_5")
-        )
+    return _recall_at_5(
+        spark, sf_dir,
+        sq8_cosine_topk(emb, emb.filter(F.col("vec_id") < 8), k=5),
     )
 
 
@@ -6315,34 +6264,31 @@ def _als_interactions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _als_train_for(spark: SparkSession, sf_dir: str, split: str):
     """Memoized ALS factor fill (the _TRAINER_MEMO convention: the
-    sweep chain is a trainer, the fill bills to the first consumer;
-    keyed by content fingerprint + applicationId). ``split`` is
-    "all" (factors row) or "train" (eval row's (u+it)%5 != 0 side).
-    Returns (user_factors, item_factors) eager checkpoints."""
+    sweep chain is a trainer, the fill bills to the first consumer).
+    ``split`` is "all" (factors row) or "train" (eval row's
+    (u+it)%5 != 0 side). Returns (user_factors, item_factors) eager
+    checkpoints."""
     from collection_templates_spark.operators.product_analytics import (
         als_implicit_rank2,
     )
 
-    key = (
-        "als",
-        split,
-        sf_dir,
-        # BOTH input tables (_als_interactions joins orders⋈lineitem;
-        # the driver can regenerate one without the other — ADVICE r14)
-        _table_fingerprint(sf_dir, "lineitem"),
-        _table_fingerprint(sf_dir, "orders"),
-        spark.sparkContext.applicationId,
-    )
-    if key not in _TRAINER_MEMO:
+    def fill():
         inter = _als_interactions(spark, sf_dir)
         if split == "train":
             inter = inter.filter((F.col("u") + F.col("it")) % 5 != 0)
         users, items = als_implicit_rank2(inter)
-        _TRAINER_MEMO[key] = (
+        return (
             users.localCheckpoint(eager=True),
             items.localCheckpoint(eager=True),
         )
-    return _TRAINER_MEMO[key]
+
+    # BOTH input tables key the fill (_als_interactions joins
+    # orders⋈lineitem; the driver can regenerate one without the
+    # other — ADVICE r14)
+    return _memo(
+        _TRAINER_MEMO, spark, sf_dir, ("als", split),
+        ("lineitem", "orders"), fill,
+    )
 
 
 def recsys_als_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7168,27 +7114,41 @@ QUERIES = {
 
 
 
-def memo_backed_queries() -> list[str]:
-    """Bank rows that serve (partly) from a process-lifetime memo
-    (_TRAINER_MEMO / _INCR_INDEX_MEMO / the shared CC labels) after
-    their first run — derived from the source so the list follows the
-    code. bench.py labels these in its side file: their min-of-N is a
-    warm-memo measurement, a DIFFERENT operation than run 1 (r9 verdict
-    cosmetic #3 — the 0.017 s dedup_incremental min was probe-only)."""
-    import inspect
-    import re
+def _reaches_memo(code, seen: set) -> bool:
+    """Whether ``code`` calls _memo, directly, through its nested code
+    objects (lambdas, local fills) or through this module's functions."""
+    from types import CodeType
 
-    pat = re.compile(
-        r"_memo_df|_brute_topk_for|_lsh_topk_for|_ivf_topk_for|_pq_"
-        r"|_respq_|_ivfpq_|_ivf_centroids_for|_perplexity_pairs_for"
-        r"|_bigram_counts_for|_unigram_model_for|_incremental_probe_for"
-        r"|_lsh_cc_for|_ann_index_probe_for|_delete_probe_for"
-        r"|_als_train_for"
+    if "_memo" in code.co_names:
+        return True
+    for name in code.co_names:
+        fn = globals().get(name)
+        if (
+            name not in seen
+            and getattr(fn, "__module__", None) == __name__
+            and hasattr(fn, "__code__")
+        ):
+            seen.add(name)
+            if _reaches_memo(fn.__code__, seen):
+                return True
+    return any(
+        _reaches_memo(c, seen)
+        for c in code.co_consts
+        if isinstance(c, CodeType)
     )
+
+
+def memo_backed_queries() -> list[str]:
+    """Bank rows that serve (partly) from a process-lifetime memo after
+    their first run: the rows whose code reaches _memo, so the list
+    follows the code. bench.py labels these in its side file: their
+    min-of-N is a warm-memo measurement, a DIFFERENT operation than
+    run 1 (r9 verdict cosmetic #3 — the 0.017 s dedup_incremental min
+    was probe-only)."""
     return sorted(
         name
         for name, fn in QUERIES.items()
-        if pat.search(inspect.getsource(fn))
+        if _reaches_memo(fn.__code__, set())
     )
 
 # Shared oracle for the two jaccard-based dedup queries: the LSH variant is

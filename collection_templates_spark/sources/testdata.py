@@ -54,15 +54,17 @@ _RELAYOUT_ROOT: str | None = None
 _DF_MEMO: dict[tuple, "DataFrame"] = {}
 
 
-def _source_key(spark: SparkSession, path: str) -> tuple:
-    return (
-        spark.sparkContext.applicationId,
-        path,
-        tuple(
-            (os.path.basename(f), os.path.getsize(f), os.stat(f).st_mtime_ns)
-            for f in _parquet_files(path)
-        ),
+def fingerprint(path: str) -> tuple:
+    """Content fingerprint of a parquet table: ``(name, size, mtime_ns)``
+    per data file, so a rewritten table gets a new one."""
+    return tuple(
+        (os.path.basename(f), os.path.getsize(f), os.stat(f).st_mtime_ns)
+        for f in _parquet_files(path)
     )
+
+
+def _source_key(spark: SparkSession, path: str) -> tuple:
+    return (spark.sparkContext.applicationId, path, fingerprint(path))
 
 
 def _parquet_files(path: str) -> list[str]:
@@ -83,13 +85,7 @@ def _maybe_relayout(spark: SparkSession, path: str) -> str:
     if not files:
         return path
     par = spark.sparkContext.defaultParallelism
-    key = (
-        path,
-        tuple(
-            (os.path.basename(f), os.path.getsize(f), os.stat(f).st_mtime_ns)
-            for f in files
-        ),
-    )
+    key = (path, fingerprint(path))
     hit = _RELAYOUT_CACHE.get(key)
     if hit is not None:
         return hit

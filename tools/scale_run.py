@@ -8,9 +8,10 @@ linear, <1 means fixed overheads still dominate, >1.3 flags a
 superlinear stage that needs profiling (docs/SCALE.md records the
 table).
 
-The bank's result memos (_TRAINER_MEMO / _INCR_INDEX_MEMO) are cleared
-before EVERY run so memoized families pay their full cost each time —
-otherwise runs 2+ of ANN/incremental rows would measure a dict lookup.
+The bank's three result memos (_TRAINER_MEMO / _INCR_INDEX_MEMO /
+_ANN_INDEX_MEMO) are cleared before EVERY run so memoized families pay
+their full cost each time — otherwise runs 2+ of ANN/incremental rows
+would measure a dict lookup.
 
 Usage:
   python tools/scale_run.py [--runs 3] [--ratio 10] [small_dir big_dir]
