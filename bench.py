@@ -54,11 +54,13 @@ def main() -> None:
     t_all = time.time()
     # FIXED alphabetical run order (r16 measurement fix, declared in
     # OPTIMIZATION_r16.md): the registry's insertion order is the
-    # correctness-sampling rotation lever and changes EVERY round, so
-    # iterating it here put a different set of rows right after the
-    # (shallow) warmup each round — measured +0.3–0.6 s on whichever
-    # rows rotated to the front (deep JIT/codegen warmth accumulates
-    # over the whole bank, beyond what the warmup block reaches).
+    # correctness-sampling order, derived from the committed
+    # CORRECTNESS_r*.json history, and changes EVERY round as that
+    # history grows, so iterating it here put a different set of rows
+    # right after the (shallow) warmup each round — measured +0.3–0.6 s
+    # on whichever rows rotated to the front (deep JIT/codegen warmth
+    # accumulates over the whole bank, beyond what the warmup block
+    # reaches).
     # Sorted order decouples measurement position from the rotation;
     # the timing loop, warmup, noop sink and min-of-N are unchanged.
     for name, fn in sorted(qs.items()):

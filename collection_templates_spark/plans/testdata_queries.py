@@ -21,8 +21,10 @@ pushdown + column pruning reach the file source.
 
 from __future__ import annotations
 
+import json
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1155,16 +1157,16 @@ def text_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sample_weighted_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weighted sampling (round 6): Efraimidis–Spirakis
     u^(1/w) keys from the portable hash, top-64 by key — inclusion
     probability ∝ n_chars, zero RNG state, replayed exactly."""
     from collection_templates_spark.operators.training_prep import (
-        sample_weighted,
+        sample_weighted as sample_weighted_op,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    return sample_weighted(docs, k=64)
+    return sample_weighted_op(docs, k=64)
 
 
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1875,7 +1877,7 @@ def wiki_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def related_collections_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+def related_collections(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Related-collections precompute as a driver row (round 7; reference
     precompute_related.py:110-156 — max_related=10, max_per_type=2,
     name_diversity_ratio=0.5; the last §2.10 surface without one).
@@ -1890,7 +1892,7 @@ def related_collections_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs), the per-(src,type) cap bounds each source's candidate
     set at types·max_per_type before the final top-k window."""
     from collection_templates_spark.operators.related import (
-        related_collections,
+        related_collections as related_collections_op,
     )
 
     part = _t(spark, sf_dir, "part")
@@ -1903,7 +1905,7 @@ def related_collections_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("types"),
         F.round(F.col("p_retailprice") * 10).cast("long").alias("rank"),
     )
-    rel = related_collections(
+    rel = related_collections_op(
         colls, max_related=10, max_per_type=2, name_diversity_ratio=0.5
     )
     return rel.select(
@@ -2326,18 +2328,18 @@ def decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("doc", "doc_id")
 
 
-def pack_sequences_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concatenation packing (round-5 LLM-pipeline extension): documents
     laid out per source shard in doc_id order, mapped onto 256-token
     context windows — offset, first window, boundary-straddle flag. One
     shuffle on the shard key, window within shard."""
     from collection_templates_spark.operators.training_prep import (
-        pack_sequences,
+        pack_sequences as pack_sequences_op,
     )
 
     docs = _t(spark, sf_dir, "documents")
     return (
-        pack_sequences(docs, context_len=256)
+        pack_sequences_op(docs, context_len=256)
         .withColumnRenamed("grp", "source")
         .withColumnRenamed("doc", "doc_id")
     )
@@ -2371,45 +2373,47 @@ def split_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assign_split(docs).select("doc_id", "split_bucket", "split")
 
 
-def sample_stratified_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified corpus sampling (round-5 LLM-pipeline
     extension): per-source keep-rates via the portable hash — src0 keeps
     everything, src1 half, src2 a quarter, the rest 10%. Pure filter,
     fully pushable, reproducible across engines and partitionings."""
     from collection_templates_spark.operators.training_prep import (
-        sample_stratified,
+        sample_stratified as sample_stratified_op,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    return sample_stratified(
+    return sample_stratified_op(
         docs, {"src0": 1.0, "src1": 0.5, "src2": 0.25}, default_rate=0.1
     ).select("doc_id", "source", "sample_bucket")
 
 
-def mixture_plan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+def mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-resampled training-mixture plan (round-5 LLM-pipeline
     extension): per-language token counts → weight ∝ tokens^0.5 → per-
     language token targets, sampling rates and epoch counts for a 100k-
     token budget (the multilingual up-sampling rule)."""
     from collection_templates_spark.operators.training_prep import (
-        mixture_plan,
+        mixture_plan as mixture_plan_op,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    return mixture_plan(docs, target_tokens=100_000).withColumnRenamed(
+    return mixture_plan_op(docs, target_tokens=100_000).withColumnRenamed(
         "grp", "lang"
     )
 
 
-def vocab_oov_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+def vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary induction + OOV rate (round-5 LLM-pipeline extension):
     top-16 corpus tokens by (count desc, token) become the vocab
     (TakeOrdered top-V, not a global window); per-doc out-of-vocabulary
     fraction via broadcast join."""
-    from collection_templates_spark.operators.training_prep import vocab_oov
+    from collection_templates_spark.operators.training_prep import (
+        vocab_oov as vocab_oov_op,
+    )
 
     docs = _t(spark, sf_dir, "documents")
-    return vocab_oov(docs, vocab_size=16).withColumnRenamed("doc", "doc_id")
+    return vocab_oov_op(docs, vocab_size=16).withColumnRenamed("doc", "doc_id")
 
 
 def text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2457,16 +2461,18 @@ def text_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnowing_containment_pairs(docs, k=20, w=8, min_shared=2)
 
 
-def export_manifest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+def export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-export manifest (round-5 LLM-pipeline extension): per
     (split, shard) doc and token counts under deterministic hash
     sharding, shard counts sized from each split's token total — the
     assignment the partitioned shard writer materializes, fully in-flow
     (per-split totals broadcast back, nothing on the driver)."""
-    from collection_templates_spark.operators.export import export_manifest
+    from collection_templates_spark.operators.export import (
+        export_manifest as export_manifest_op,
+    )
 
     docs = _t(spark, sf_dir, "documents")
-    return export_manifest(docs, tokens_per_shard=5000)
+    return export_manifest_op(docs, tokens_per_shard=5000)
 
 
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3767,16 +3773,16 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gopher_quality_rules(_t(spark, sf_dir, "documents"))
 
 
-def sample_reservoir_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-source k-sample (training_prep.sample_reservoir):
     minwise portable hash folded mod a large prime (the raw two-fold
     hash is near-monotone over sequential ids), k=5 per source —
     stable across engines, runs, partitionings and appends."""
     from collection_templates_spark.operators.training_prep import (
-        sample_reservoir,
+        sample_reservoir as sample_reservoir_op,
     )
 
-    return sample_reservoir(_t(spark, sf_dir, "documents"), k=5)
+    return sample_reservoir_op(_t(spark, sf_dir, "documents"), k=5)
 
 
 def ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4206,16 +4212,16 @@ def skew_key_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return key_skew_report(_t(spark, sf_dir, "orders"), "o_custkey")
 
 
-def search_tfidf_cosine_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+def search_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine-normalized vector-space retrieval
     (search.search_tfidf_cosine) for 'spark hash join' — the SMART
     lnc.ltc baseline next to the raw tf·idf search_bm25ish row;
     per-doc norms over ALL terms, DECIMAL-accumulated."""
     from collection_templates_spark.operators.search import (
-        search_tfidf_cosine,
+        search_tfidf_cosine as search_tfidf_cosine_op,
     )
 
-    return search_tfidf_cosine(
+    return search_tfidf_cosine_op(
         _t(spark, sf_dir, "documents"), "spark hash join", k=20
     )
 
@@ -4915,14 +4921,16 @@ def temporal_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("grp", "event_type")
 
 
-def ltr_rank_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+def ltr_rank_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary rank-quality battery (ltr.ltr_rank_metrics): MRR@10,
     P@5, Recall@10, AP@10 of the trained pointwise ranker per query —
     the endpoint-comparison metrics next to the graded NDCG row
     (reference research/learning-to-rank/evaluate_endpoints.py)."""
-    from collection_templates_spark.operators.ltr import ltr_rank_metrics
+    from collection_templates_spark.operators.ltr import (
+        ltr_rank_metrics as ltr_rank_metrics_op,
+    )
 
-    return ltr_rank_metrics(_t(spark, sf_dir, "documents"))
+    return ltr_rank_metrics_op(_t(spark, sf_dir, "documents"))
 
 
 def _parity_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6186,7 +6194,7 @@ def agg_nation_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def mixture_materialize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+def mixture_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized training mixture (round 15;
     training_prep.mixture_materialize): per-language token targets for
     an 8k budget (BELOW the corpus token mass, so the cumulative cut
@@ -6198,8 +6206,8 @@ def mixture_materialize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from collection_templates_spark.operators.training_prep import (
         bpe_ish_token_count,
-        mixture_materialize,
-        mixture_plan,
+        mixture_materialize as mixture_materialize_op,
+        mixture_plan as mixture_plan_op,
     )
 
     docs = _t(spark, sf_dir, "documents")
@@ -6215,10 +6223,10 @@ def mixture_materialize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("___n_tok"),
     ).localCheckpoint(eager=True, storageLevel=_SL.DISK_ONLY)
-    plan = mixture_plan(
+    plan = mixture_plan_op(
         counted, target_tokens=8_000, token_count_col="___n_tok"
     )
-    return mixture_materialize(
+    return mixture_materialize_op(
         counted, plan, token_count_col="___n_tok"
     )
 
@@ -6707,411 +6715,6 @@ def text_langid_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         language_id(F.col("text")).alias("predicted"),
     )
     return cohens_kappa(pairs, "actual", "predicted")
-
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # STALEST-EXTERNALLY-CHECKED queries FIRST (the driver samples ~50
-    # of the bank per round in INSERTION ORDER — this dict's order is
-    # the sampling lever). Rotated for round 14 per the r13 verdict
-    # #1: the new r14 rows lead, then the 19 parity-core rows with no
-    # external green since r9 (the r9-stale remainder the r13 sample
-    # missed), then the r10/r11-stale cohorts; the 50 rows each of r12
-    # and r13 just sampled sit at the back — so the r14 sample has
-    # ZERO overlap with r13's. All rows pass the identical local
-    # oracle (tools/check.py) every round; the full-bank artifact is
-    # CHECKLOCAL_r{N}.json.
-    # --- r14 new rows (never externally sampled) ---
-    "dedup_index_delete": dedup_index_delete,
-    "ann_index_delete": ann_index_delete,
-    "embedding_pca_components": embedding_pca_components,
-    "recsys_als_factors": recsys_als_factors,
-    "events_ar2_forecast": events_ar2_forecast,
-    "recsys_als_eval": recsys_als_eval,
-    "join_shipping_priority": join_shipping_priority,
-    "agg_large_orders": agg_large_orders,
-    # --- r9-stale parity core (no external green since r9) ---
-    "agg_rollup_daily": agg_rollup_daily,
-    "scalar_json_extract": scalar_json_extract,
-    "join_inner_enrich": join_inner_enrich,
-    "join_left_default": join_left_default,
-    "join_semi_allowlist": join_semi_allowlist,
-    "join_anti_archive": join_anti_archive,
-    "snapshot_diff_merge": snapshot_diff_merge,
-    "window_dup_count": window_dup_count,
-    "window_topk_per_group": window_topk_per_group,
-    "window_dedup_keep_first": window_dedup_keep_first,
-    "window_sessionize": window_sessionize,
-    "window_session_native": window_session_native,
-    "window_hopping": window_hopping,
-    "temporal_asof_join": temporal_asof_join,
-    "temporal_range_join": temporal_range_join,
-    "set_union_membership": set_union_membership,
-    "scalar_curate_name": scalar_curate_name,
-    "graph_transitive_closure": graph_transitive_closure,
-    "dedup_exact": dedup_exact,
-    # --- r10-stale ---
-    "ann_incremental_topk": ann_incremental_topk,
-    "sketch_hll_union": sketch_hll_union,
-    "events_markov_transitions": events_markov_transitions,
-    "text_script_mix": text_script_mix,
-    "agg_weighted_median": agg_weighted_median,
-    "graph_label_propagation": graph_label_propagation,
-    "snapshot_merge_upsert": snapshot_merge_upsert,
-    "basket_item_pairs": basket_item_pairs,
-    "text_tfidf_top_terms": text_tfidf_top_terms,
-    "drift_welch_ttest": drift_welch_ttest,
-    "text_zipf_fit": text_zipf_fit,
-    "dedup_cluster_report": dedup_cluster_report,
-    "events_conversion_lag": events_conversion_lag,
-    "drift_js_events": drift_js_events,
-    "stats_winsorize": stats_winsorize,
-    "text_token_pmi": text_token_pmi,
-    "events_state_islands": events_state_islands,
-    "events_window_funnel": events_window_funnel,
-    "join_salted_skew": join_salted_skew,
-    "layout_zorder_stats": layout_zorder_stats,
-    "temporal_gap_fill": temporal_gap_fill,
-    "events_trailing_zscore": events_trailing_zscore,
-    "quality_dynamic_threshold": quality_dynamic_threshold,
-    "corpus_cross_source_overlap": corpus_cross_source_overlap,
-    "dedup_ngram_jaccard": dedup_ngram_jaccard,
-    "dedup_minhash_lsh": dedup_minhash_lsh,
-    "dedup_simhash": dedup_simhash,
-    "dedup_clusters": dedup_clusters,
-    "dedup_embedding_cosine": dedup_embedding_cosine,
-    "agg_pricing_summary": agg_pricing_summary,
-    "filter_pushdown_revenue": filter_pushdown_revenue,
-    "text_stats": text_stats,
-    "text_language_id": text_language_id,
-    "text_fingerprint": text_fingerprint,
-    "text_token_frequencies": text_token_frequencies,
-    "text_chunking": text_chunking,
-    "ann_label_centroids": ann_label_centroids,
-    "window_running_total": window_running_total,
-    "search_bm25ish": search_bm25ish,
-    "search_stemmed_ltr": search_stemmed_ltr,
-    "quality_report": quality_report,
-    "multimodal_features": multimodal_features,
-    "text_word_model": text_word_model,
-    "scalar_log_probability": scalar_log_probability,
-    "wiki_pipeline_funnel": wiki_pipeline_funnel,
-    "related_collections": related_collections_q,
-    "graph_pagerank_dangling": graph_pagerank_dangling,
-    "rollup_refresh": rollup_refresh,
-    "sketch_theta_intersection": sketch_theta_intersection,
-    "sketch_bloom_fpr": sketch_bloom_fpr,
-    # --- r11-stale ---
-    "stats_ks_test": stats_ks_test,
-    "stats_chi_square": stats_chi_square,
-    "stats_correlation": stats_correlation,
-    "events_anomaly_mad": events_anomaly_mad,
-    "events_cusum_changepoint": events_cusum_changepoint,
-    "events_attribution": events_attribution,
-    "customer_rfm_segments": customer_rfm_segments,
-    "events_top_paths": events_top_paths,
-    "graph_kcore": graph_kcore,
-    "graph_link_prediction": graph_link_prediction,
-    "text_readability": text_readability,
-    "text_entropy": text_entropy,
-    "quality_gopher_rules": quality_gopher_rules,
-    "sample_reservoir": sample_reservoir_q,
-    "ann_sq8_recall": ann_sq8_recall,
-    "text_rake_keywords": text_rake_keywords,
-    "stats_ols_regression": stats_ols_regression,
-    "text_feature_hashing": text_feature_hashing,
-    "decontaminate_fuzzy": decontaminate_fuzzy,
-    "events_ewma": events_ewma,
-    "search_phrase_match": search_phrase_match,
-    "stats_mann_whitney": stats_mann_whitney,
-    "agg_gini_concentration": agg_gini_concentration,
-    "text_langid_confusion": text_langid_confusion,
-    "temporal_ohlc": temporal_ohlc,
-    "events_autocorrelation": events_autocorrelation,
-    "stats_benford": stats_benford,
-    "graph_assortativity": graph_assortativity,
-    "corpus_dsir_weights": corpus_dsir_weights,
-    "events_interval_coverage": events_interval_coverage,
-    "graph_clustering_coeff": graph_clustering_coeff,
-    "text_heaps_fit": text_heaps_fit,
-    "events_seasonal_decompose": events_seasonal_decompose,
-    "events_pattern_runs": events_pattern_runs,
-    "text_lexical_diversity": text_lexical_diversity,
-    "text_perplexity_kn": text_perplexity_kn,
-    "ann_knn_accuracy": ann_knn_accuracy,
-    "graph_hits": graph_hits,
-    "text_common_spans": text_common_spans,
-    "window_rank_functions": window_rank_functions,
-    "window_range_moving_sum": window_range_moving_sum,
-    "agg_unpivot": agg_unpivot,
-    "dedup_fuzzy_names": dedup_fuzzy_names,
-    "agg_percentile_bands": agg_percentile_bands,
-    "agg_boolean": agg_boolean,
-    "scalar_array_functions": scalar_array_functions,
-    "agg_grouping_sets": agg_grouping_sets,
-    "corpus_report": corpus_report,
-    "export_manifest": export_manifest_q,
-    "text_boilerplate": text_boilerplate,
-    # --- sampled by the r12 driver gate (freshest external) ---
-    "ltr_train_weights": ltr_train_weights,
-    "ltr_ndcg_eval": ltr_ndcg_eval,
-    "stats_spearman": stats_spearman,
-    "stats_kendall": stats_kendall,
-    "events_theil_sen": events_theil_sen,
-    "stats_bootstrap_ci": stats_bootstrap_ci,
-    "stats_anova": stats_anova,
-    "stats_kruskal_wallis": stats_kruskal_wallis,
-    "stats_two_proportion": stats_two_proportion,
-    "events_cuped": events_cuped,
-    "events_kaplan_meier": events_kaplan_meier,
-    "profile_events": profile_events,
-    "graph_bfs_layers": graph_bfs_layers,
-    "drift_psi_events": drift_psi_events,
-    "quality_calibration": quality_calibration,
-    "events_user_growth": events_user_growth,
-    "privacy_k_anonymity": privacy_k_anonymity,
-    "skew_key_report": skew_key_report,
-    "search_tfidf_cosine": search_tfidf_cosine_q,
-    "lineitem_pareto_abc": lineitem_pareto_abc,
-    "ann_centroid_separation": ann_centroid_separation,
-    "events_rolling_median": events_rolling_median,
-    "events_cohort_ltv": events_cohort_ltv,
-    "text_containment": text_containment,
-    "text_perplexity": text_perplexity,
-    "text_winnowing": text_winnowing,
-    "vocab_oov": vocab_oov_q,
-    "ann_ivfpq_topk": ann_ivfpq_topk,
-    "bpe_apply_stats": bpe_apply_stats,
-    "dedup_semantic": dedup_semantic,
-    "quality_logistic": quality_logistic,
-    "text_perplexity_bigram": text_perplexity_bigram,
-    "bpe_fertility_by_lang": bpe_fertility_by_lang,
-    "corpus_funnel": corpus_funnel,
-    "sketch_cms_errors": sketch_cms_errors,
-    "sketch_hll_cardinality": sketch_hll_cardinality,
-    "graph_pagerank": graph_pagerank,
-    "sample_weighted": sample_weighted_q,
-    "text_top_terms": text_top_terms,
-    "dedup_paragraph": dedup_paragraph,
-    "dedup_keep_best": dedup_keep_best,
-    "events_cohort_retention": events_cohort_retention,
-    "graph_triangle_count": graph_triangle_count,
-    "sketch_quantile_errors": sketch_quantile_errors,
-    "dedup_incremental": dedup_incremental,
-    "delta_pipeline": delta_pipeline,
-    "ann_cosine_topk": ann_cosine_topk,
-    "ann_lsh_topk": ann_lsh_topk,
-    "ann_ivf_topk": ann_ivf_topk,
-    "ann_lsh_recall": ann_lsh_recall,
-    # --- sampled by the r13 driver gate (freshest external): the 30
-    # r13-new rows + the 20 r9-stale rows the r13 sample re-covered ---
-    "embedding_pca_power": embedding_pca_power,
-    "temporal_dtw": temporal_dtw,
-    "multimodal_phash_dedup": multimodal_phash_dedup,
-    "graph_ppr": graph_ppr,
-    "events_holt_forecast": events_holt_forecast,
-    "sketch_theta_difference": sketch_theta_difference,
-    "sketch_hll_sliding": sketch_hll_sliding,
-    "temporal_sax_words": temporal_sax_words,
-    "stats_breusch_pagan": stats_breusch_pagan,
-    "events_nelson_aalen": events_nelson_aalen,
-    "stats_durbin_watson": stats_durbin_watson,
-    "lineitem_skyline": lineitem_skyline,
-    "basket_item_similarity": basket_item_similarity,
-    "search_rrf": search_rrf,
-    "sketch_quantile_merge": sketch_quantile_merge,
-    "stats_levene": stats_levene,
-    "stats_jarque_bera": stats_jarque_bera,
-    "stats_grubbs": stats_grubbs,
-    "stats_permutation": stats_permutation,
-    "events_poisson_rate": events_poisson_rate,
-    "feature_mutual_information": feature_mutual_information,
-    "graph_shortest_paths": graph_shortest_paths,
-    "text_ngram_novelty": text_ngram_novelty,
-    "temporal_downsample_lttb": temporal_downsample_lttb,
-    "ltr_rank_metrics": ltr_rank_metrics_q,
-    "stats_srm_check": stats_srm_check,
-    "stats_power_analysis": stats_power_analysis,
-    "stats_tost": stats_tost,
-    "stats_mahalanobis": stats_mahalanobis,
-    "quality_ece": quality_ece,
-    "ann_ivf_recall": ann_ivf_recall,
-    "ann_pq_topk": ann_pq_topk,
-    "ann_pq_rerank": ann_pq_rerank,
-    "ann_respq_topk": ann_respq_topk,
-    "ann_respq_recall": ann_respq_recall,
-    "ann_pq_recall": ann_pq_recall,
-    "decontaminate_ngrams": decontaminate_ngrams,
-    "pack_sequences": pack_sequences_windows,
-    "text_repetition": text_repetition,
-    "redact_pii": redact_pii,
-    "decontaminate_spans": decontaminate_spans,
-    "split_assignment": split_assignment,
-    "sample_stratified": sample_stratified_q,
-    "mixture_plan": mixture_plan_q,
-    "agg_entity_pivot": agg_entity_pivot,
-    "agg_status_histogram": agg_status_histogram,
-    "agg_member_metrics": agg_member_metrics,
-    "agg_merge_collections": agg_merge_collections,
-    "date_daily_rollup": date_daily_rollup,
-    "agg_pivot_event_types": agg_pivot_event_types,
-    # --- r15 new rows ---
-    "rollup_incremental_delete": rollup_incremental_delete,
-    "join_exists_late_orders": join_exists_late_orders,
-    "agg_supplier_parts_distinct": agg_supplier_parts_distinct,
-    "join_sole_late_supplier": join_sole_late_supplier,
-    "text_chunk_windows": text_chunk_windows,
-    "join_region_nation_revenue": join_region_nation_revenue,
-    "agg_order_count_distribution": agg_order_count_distribution,
-    "agg_promo_revenue_share": agg_promo_revenue_share,
-    "join_top_supplier_revenue": join_top_supplier_revenue,
-    "agg_small_qty_revenue": agg_small_qty_revenue,
-    "filter_disjunctive_revenue": filter_disjunctive_revenue,
-    "agg_idle_customer_balance": agg_idle_customer_balance,
-    "join_nation_pair_volume": join_nation_pair_volume,
-    "join_returned_revenue_top": join_returned_revenue_top,
-    "agg_market_share": agg_market_share,
-    "agg_nation_profit": agg_nation_profit,
-    "mixture_materialize": mixture_materialize_q,
-    "pack_bucket_stats": pack_bucket_stats,
-    "embedding_outliers": embedding_outliers,
-    "agg_ship_delay_priority": agg_ship_delay_priority,
-    "window_sliding_distinct_users": window_sliding_distinct_users,
-    "quality_isotonic_calibration": quality_isotonic_calibration,
-    "bpe_train_merges": bpe_train_merges,
-    "join_min_cost_supplier": join_min_cost_supplier,
-    "agg_part_value_share": agg_part_value_share,
-    "join_dominant_supplier": join_dominant_supplier,
-    "quality_roc_auc": quality_roc_auc,
-    "text_langid_kappa": text_langid_kappa,
-}
-
-# r16 rotation (r15 verdict #8): the driver samples ~50 rows in
-# INSERTION ORDER — recsys_als_eval leads (externally red r14/r15;
-# the r16 fix needs an external check), then the 6 rows whose last
-# external green was r10, then the 50-row r11-stale cohort (57 rows
-# ahead of the sample boundary, zero overlap with the r15 sample);
-# the 50 rows r15 just checked move to the back.
-_R16_FRONT = (
-    "recsys_als_eval",
-    "wiki_pipeline_funnel",
-    "related_collections",
-    "graph_pagerank_dangling",
-    "rollup_refresh",
-    "sketch_theta_intersection",
-    "sketch_bloom_fpr",
-    "stats_ks_test",
-    "stats_chi_square",
-    "stats_correlation",
-    "events_anomaly_mad",
-    "events_cusum_changepoint",
-    "events_attribution",
-    "customer_rfm_segments",
-    "events_top_paths",
-    "graph_kcore",
-    "graph_link_prediction",
-    "text_readability",
-    "text_entropy",
-    "quality_gopher_rules",
-    "sample_reservoir",
-    "ann_sq8_recall",
-    "text_rake_keywords",
-    "stats_ols_regression",
-    "text_feature_hashing",
-    "decontaminate_fuzzy",
-    "events_ewma",
-    "search_phrase_match",
-    "stats_mann_whitney",
-    "agg_gini_concentration",
-    "text_langid_confusion",
-    "temporal_ohlc",
-    "events_autocorrelation",
-    "stats_benford",
-    "graph_assortativity",
-    "corpus_dsir_weights",
-    "events_interval_coverage",
-    "graph_clustering_coeff",
-    "text_heaps_fit",
-    "events_seasonal_decompose",
-    "events_pattern_runs",
-    "text_lexical_diversity",
-    "text_perplexity_kn",
-    "ann_knn_accuracy",
-    "graph_hits",
-    "text_common_spans",
-    "window_rank_functions",
-    "window_range_moving_sum",
-    "agg_unpivot",
-    "dedup_fuzzy_names",
-    "agg_percentile_bands",
-    "agg_boolean",
-    "scalar_array_functions",
-    "agg_grouping_sets",
-    "corpus_report",
-    "export_manifest",
-    "text_boilerplate",
-)
-_R15_SAMPLED = (
-    "text_langid_kappa",
-    "quality_roc_auc",
-    "join_min_cost_supplier",
-    "agg_part_value_share",
-    "join_dominant_supplier",
-    "agg_ship_delay_priority",
-    "window_sliding_distinct_users",
-    "quality_isotonic_calibration",
-    "bpe_train_merges",
-    "rollup_incremental_delete",
-    "join_exists_late_orders",
-    "agg_supplier_parts_distinct",
-    "join_sole_late_supplier",
-    "text_chunk_windows",
-    "join_region_nation_revenue",
-    "agg_order_count_distribution",
-    "agg_promo_revenue_share",
-    "join_top_supplier_revenue",
-    "agg_small_qty_revenue",
-    "filter_disjunctive_revenue",
-    "agg_idle_customer_balance",
-    "join_nation_pair_volume",
-    "join_returned_revenue_top",
-    "agg_market_share",
-    "agg_nation_profit",
-    "mixture_materialize",
-    "pack_bucket_stats",
-    "embedding_outliers",
-    "recsys_als_eval",
-    "corpus_cross_source_overlap",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_clusters",
-    "dedup_embedding_cosine",
-    "agg_pricing_summary",
-    "filter_pushdown_revenue",
-    "text_stats",
-    "text_language_id",
-    "text_fingerprint",
-    "text_token_frequencies",
-    "text_chunking",
-    "ann_label_centroids",
-    "window_running_total",
-    "search_bm25ish",
-    "search_stemmed_ltr",
-    "quality_report",
-    "multimodal_features",
-    "text_word_model",
-    "scalar_log_probability",
-)
-QUERIES = {
-    **{k: QUERIES[k] for k in _R16_FRONT},
-    **{
-        k: v
-        for k, v in QUERIES.items()
-        if k not in _R16_FRONT and k not in _R15_SAMPLED
-    },
-    **{k: QUERIES[k] for k in _R15_SAMPLED if k not in _R16_FRONT},
-}
-
 
 
 def _reaches_memo(code, seen: set) -> bool:
@@ -15341,7 +14944,7 @@ def _als_eval_oracle_sql(sweeps: int = 2, alpha: int = 40) -> str:
     FROM (
         SELECT count(*) AS n_users,
                count(first_rank) AS n_hit_users,
-               coalesce(sum(n_hits), 0) AS hits_at_k,
+               CAST(coalesce(sum(n_hits), 0) AS BIGINT) AS hits_at_k,
                coalesce(sum(2520 // first_rank), 0) AS rr_sum
         FROM cohort c LEFT JOIN per_user p ON p.u = c.u)
     """
@@ -16347,3 +15950,47 @@ ORACLE_SQL["text_langid_kappa"] = """
            + CAST(0 AS DOUBLE) AS kappa
     FROM tot, rc
 """
+
+
+def _green(rec: dict) -> bool:
+    """An external check passed: the driver's own record fields."""
+    return (
+        bool(rec["rows_match"] and rec["schema_match"] and rec["hash_match"])
+        and rec["err"] is None
+    )
+
+
+def external_order(
+    names: Iterable[str], history: dict[int, dict[str, dict]]
+) -> list[str]:
+    """``names`` in the order the external driver should sample them,
+    given its past checks ``{round: CORRECTNESS record}``: rows it never
+    checked first, then rows whose latest check was not green, then the
+    rest by the round of their latest (green) check, oldest first. Ties
+    keep the order of ``names``."""
+
+    def rank(name: str) -> tuple[int, int]:
+        checked = [r for r, recs in history.items() if name in recs]
+        if not checked:
+            return (0, 0)
+        last = max(checked)
+        return (2, last) if _green(history[last][name]) else (1, 0)
+
+    return sorted(names, key=rank)
+
+
+def _external_history() -> dict[int, dict[str, dict]]:
+    """The driver's committed ``CORRECTNESS_r<round>.json`` records."""
+    root = Path(__file__).resolve().parents[2]
+    return {
+        int(p.stem.removeprefix("CORRECTNESS_r")): json.loads(p.read_text())
+        for p in root.glob("CORRECTNESS_r*.json")
+    }
+
+
+# The driver samples rows in insertion order, so the least recently
+# verified rows go first. A row is its builder plus its ORACLE_SQL entry.
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    name: globals()[name]
+    for name in external_order(ORACLE_SQL, _external_history())
+}

@@ -66,14 +66,14 @@ QRANK = [("Q1", 5000), ("Q2", 300), ("Q100", 77)]
 DOMAINS = [("thewall", "taken"), ("animals", "available")]
 
 
-def test_minimum_slice(spark, tmp_path):
-    inputs = PipelineInputs(
+def _inputs(spark, categorylinks=CATEGORYLINKS, pagelinks=PAGELINKS, **kw):
+    return PipelineInputs(
         nt_lines=spark.createDataFrame([(x,) for x in NT], ["value"]),
         categorylinks=spark.createDataFrame(
-            CATEGORYLINKS, "cl_from bigint, cl_to string"
+            categorylinks, "cl_from bigint, cl_to string"
         ),
         pagelinks=spark.createDataFrame(
-            PAGELINKS, "pl_from bigint, pl_title string"
+            pagelinks, "pl_from bigint, pl_title string"
         ),
         mapping=spark.createDataFrame(
             MAPPING, "title string, wikipedia_id bigint, qid string"
@@ -81,7 +81,12 @@ def test_minimum_slice(spark, tmp_path):
         qrank=spark.createDataFrame(QRANK, "id string, rank bigint"),
         domains=spark.createDataFrame(DOMAINS, "name string, status string"),
         created_ms=123.0,
+        **kw,
     )
+
+
+def test_minimum_slice(spark, tmp_path):
+    inputs = _inputs(spark)
     result = run_pipeline(spark, inputs, workdir=str(tmp_path))
     docs = result["merged_final"].collect()
     assert len(docs) == 1
@@ -108,6 +113,33 @@ def test_minimum_slice(spark, tmp_path):
     assert wall.namehash.startswith("0x")
     assert t.top10_names == t.names
 
+    ops = {r.id: r.op for r in result["operations"].collect()}
+    assert ops == {"Q100": "insert"}
+
+
+def test_degenerate_inputs(spark, tmp_path):
+    """Empty link tables and an empty previous snapshot give typed,
+    empty-or-smaller results, never a plan-construction error."""
+    # no categories and no lists: nothing to collect
+    none = run_pipeline(
+        spark, _inputs(spark, categorylinks=[], pagelinks=[]),
+        workdir=str(tmp_path / "none"),
+    )
+    docs = none["merged_final"]
+    assert docs.count() == 0 and none["operations"].count() == 0
+    assert "template" in docs.columns
+
+    # no lists: the category alone, diffed against an empty snapshot
+    result = run_pipeline(
+        spark,
+        _inputs(
+            spark, pagelinks=[],
+            previous_snapshot=spark.createDataFrame([], docs.schema),
+        ),
+        workdir=str(tmp_path / "no_lists"),
+    )
+    [doc] = result["merged_final"].collect()
+    assert doc.metadata.id == "Q100" and not doc.template.is_merged
     ops = {r.id: r.op for r in result["operations"].collect()}
     assert ops == {"Q100": "insert"}
 
@@ -141,19 +173,8 @@ def test_minimum_slice_mapping_from_sqlite(spark, tmp_path):
     con.close()
 
     mapping = title_qid_from_mapping(read_wikimapper(spark, db, num_partitions=2))
-    inputs = PipelineInputs(
-        nt_lines=spark.createDataFrame([(x,) for x in NT], ["value"]),
-        categorylinks=spark.createDataFrame(
-            CATEGORYLINKS, "cl_from bigint, cl_to string"
-        ),
-        pagelinks=spark.createDataFrame(
-            PAGELINKS, "pl_from bigint, pl_title string"
-        ),
-        mapping=mapping,
-        qrank=spark.createDataFrame(QRANK, "id string, rank bigint"),
-        domains=spark.createDataFrame(DOMAINS, "name string, status string"),
-        created_ms=123.0,
-    )
+    inputs = _inputs(spark)
+    inputs.mapping = mapping
     result = run_pipeline(spark, inputs, workdir=str(tmp_path / "wd"))
     docs = result["merged_final"].collect()
     assert len(docs) == 1

@@ -1,9 +1,12 @@
 """Local replica of the driver's correctness gate.
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB at
-the given sf dir, then compares row count, schema (column names), and an
-order-insensitive value comparison (columns sorted by name, rows sorted,
-doubles compared via repr after normalization).
+the given sf dir, then compares row count, schema (column names, and each
+column's type class: integer, decimal, floating, string, boolean, date,
+timestamp, nested), and an order-insensitive value comparison (columns
+sorted by name, rows sorted, doubles compared via repr after
+normalization). Values are compared as strings, so the type classes are
+what catches e.g. a DuckDB HUGEINT sum against a Spark bigint.
 
 Usage: python tools/check.py [sf_dir] [query ...]
 """
@@ -40,6 +43,39 @@ def norm_cell(v):
     if isinstance(v, (bytes, bytearray)):
         return v.hex()
     return str(v)
+
+
+def spark_type_class(dt) -> str:
+    from pyspark.sql import types as T
+
+    for cls, name in (
+        (T.IntegralType, "integer"),
+        (T.DecimalType, "decimal"),  # before FractionalType, its base
+        (T.FractionalType, "floating"),
+        (T.StringType, "string"),
+        (T.BooleanType, "boolean"),
+        (T.DateType, "date"),
+        ((T.TimestampType, T.TimestampNTZType), "timestamp"),
+        ((T.ArrayType, T.MapType, T.StructType), "nested"),
+    ):
+        if isinstance(dt, cls):
+            return name
+    return dt.typeName()
+
+
+def duckdb_type_class(t: str) -> str:
+    if t.endswith("]") or t.startswith(("STRUCT", "MAP", "UNION")):
+        return "nested"
+    if t.startswith("DECIMAL") or t.endswith("HUGEINT"):
+        return "decimal"
+    if t.endswith("INT") or t == "INTEGER":
+        return "integer"
+    if t.startswith("TIMESTAMP"):
+        return "timestamp"
+    return {
+        "FLOAT": "floating", "DOUBLE": "floating", "VARCHAR": "string",
+        "BOOLEAN": "boolean", "DATE": "date",
+    }.get(t, t.lower())
 
 
 def normalize(cols, rows):
@@ -100,6 +136,10 @@ def main() -> int:
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
+            stypes = {
+                f.name: spark_type_class(f.dataType)
+                for f in sdf.schema.fields
+            }
             srows = [tuple(r) for r in sdf.collect()]
             rec["spark_rows"] = len(srows)
         except Exception as ex:  # noqa: BLE001
@@ -107,16 +147,17 @@ def main() -> int:
             rec["err"] = f"spark: {ex}"
             failures.append(name)
             continue
-        if name not in oracles:
-            print(f"ok?  {name}: rows-only ({len(srows)} rows, no oracle) "
-                  f"[{time.time()-t0:.1f}s]")
-            rec["err"] = "rows-only (no oracle)"
-            continue
         try:
             res = con.execute(oracles[name])
             dcols = [d[0] for d in res.description]
             drows = res.fetchall()
             rec["oracle_rows"] = len(drows)
+            dtypes = {
+                col: duckdb_type_class(t)
+                for col, t, *_ in con.execute(
+                    f"DESCRIBE {oracles[name]}"
+                ).fetchall()
+            }
         except Exception as ex:  # noqa: BLE001
             print(f"FAIL {name}: duckdb error: {ex}")
             rec["err"] = f"duckdb: {ex}"
@@ -124,11 +165,18 @@ def main() -> int:
             continue
         sc, sr = normalize(scols, srows)
         dc, dr = normalize(dcols, drows)
-        rec["schema_match"] = sc == dc
+        types = {
+            c: (t, dtypes.get(c)) for c, t in stypes.items()
+            if t != dtypes.get(c)
+        }
+        rec["schema_match"] = sc == dc and not types
         rec["rows_match"] = len(sr) == len(dr)
         rec["hash_match"] = sr == dr
         if sc != dc:
             print(f"FAIL {name}: schema {sc} vs {dc}")
+            failures.append(name)
+        elif types:
+            print(f"FAIL {name}: types (spark, duckdb) {types}")
             failures.append(name)
         elif len(sr) != len(dr):
             print(f"FAIL {name}: rowcount {len(sr)} vs {len(dr)}")
