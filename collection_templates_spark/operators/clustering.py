@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from collection_templates_spark.operators.graph import _symmetric_edges
+
 # Round index from which the pointer-jump step runs. Quasi-clique dup
 # graphs (the common near-dup shape) reach the fixpoint in ≤ 2
 # propagation rounds, so skipping the jump there removes its extra
@@ -49,24 +51,17 @@ def connected_components(
     >2^20-scale label paths — effectively unreachable; the guard exists
     so a truncated result can never be silently returned).
     """
-    edges = (
-        pairs.select(F.col(left).alias("a"), F.col(right).alias("b"))
-        .unionByName(
-            pairs.select(F.col(right).alias("a"), F.col(left).alias("b"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = _symmetric_edges(pairs, left, right).localCheckpoint(eager=True)
     labels = (
-        edges.groupBy(F.col("a").alias("node"))
-        .agg(F.min("b").alias("___mb"))
+        edges.groupBy(F.col("src").alias("node"))
+        .agg(F.min("dst").alias("___mb"))
         .select("node", F.least("node", "___mb").alias("cluster"))
         .localCheckpoint(eager=True)
     )
     for it in range(max_iterations):
         neighbor_min = (
-            edges.join(labels, edges.b == labels.node)
-            .groupBy(F.col("a").alias("node"))
+            edges.join(labels, edges.dst == labels.node)
+            .groupBy(F.col("src").alias("node"))
             .agg(F.min("cluster").alias("nmin"))
         )
         propagated = labels.join(neighbor_min, "node", "left").select(

@@ -10,9 +10,10 @@ Scale notes (the subclass graph is ~3.4M edges, the instance set ~100M):
 - We never materialize the full closure of the *instance* layer — only the
   closure of the small class-level graph, then semi-join instances to it.
 - One frontier loop (``_expand``) serves ``transitive_closure``,
-  ``reachable_from`` and, through the latter, ontology validation. Each
-  iteration is join + distinct (one shuffle each); lineage is cut with
-  ``localCheckpoint`` so the plan doesn't grow linearly with depth.
+  ``reachable_from`` (and, through it, ontology validation) and
+  ``bfs_layers``. Each sweep is join + distinct + anti-join; the loop's
+  one lineage-cut rule is stated in its docstring: cut each sweep's new
+  pairs, never re-cut the running union of those cut leaves.
 - Cycles are tolerated: ``distinct`` + the subtract-known step make every
   frontier strictly new pairs, so a cycle converges instead of looping.
 - Skew: the ancestor side of popular classes (Q5 "human" subtree) is hot;
@@ -40,7 +41,9 @@ def transitive_closure(
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     e = e.localCheckpoint(eager=True)
-    pairs = e.select(F.col("src").alias("seed"), F.col("dst").alias("node"))
+    pairs = e.select(
+        F.col("src").alias("seed"), F.col("dst").alias("node"), F.lit(0).alias("hop")
+    )
     closure = _expand(pairs, e, max_iterations)
     return closure.select(F.col("seed").alias("src"), F.col("node").alias("dst"))
 
@@ -64,23 +67,35 @@ def reachable_from(
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     seeds = sources.select(F.col(sources.columns[0]).alias("seed")).distinct()
-    reached = seeds.select("seed", F.col("seed").alias("node")).localCheckpoint(
-        eager=True
+    reached = (
+        seeds.select("seed", F.col("seed").alias("node"))
+        .localCheckpoint(eager=True)
+        .withColumn("hop", F.lit(0))
     )
-    return _expand(reached, e, max_iterations)
+    return _expand(reached, e, max_iterations).select("seed", "node")
 
 
 def _expand(reached: DataFrame, e: DataFrame, max_iterations: int) -> DataFrame:
-    """The seeded frontier loop: grow the (seed, node) pairs ``reached``
-    along the (src, dst) edges ``e`` until no new pair appears.
+    """The seeded frontier loop: grow the (seed, node, hop) rows
+    ``reached`` along the (src, dst) edges ``e`` until no new (seed, node)
+    pair appears or ``max_iterations`` sweeps have run. Sweep ``i`` tags
+    the pairs it first reaches with ``hop = i``; seed rows keep the hop
+    their caller gave them.
 
-    Each sweep joins only the newest pairs against the edges, keeps the
-    pairs not yet reached, and cuts lineage on both the new pairs and the
-    running union. Cycles converge because every frontier is strictly new
-    pairs.
+    Each sweep joins only the newest pairs against the edges and keeps
+    the pairs not yet reached. Cycles converge because every frontier is
+    strictly new pairs.
+
+    Lineage-cut rule (the one policy of this loop):
+    - each sweep's new pairs are cut eagerly: they feed the emptiness
+      test, the running union and the next sweep's join;
+    - the running union ``reached`` is never re-cut: it is a union of
+      leaves that are already cut (the caller's seeds plus every sweep's
+      new pairs), so consumers rescan those blocks and a re-cut would
+      only re-write them in one extra job per sweep.
     """
     frontier = reached
-    for _ in range(max_iterations):
+    for hop in range(1, max_iterations + 1):
         # expand: follow one more edge from the current frontier
         grown = (
             frontier.alias("f")
@@ -88,14 +103,26 @@ def _expand(reached: DataFrame, e: DataFrame, max_iterations: int) -> DataFrame:
             .select("f.seed", F.col("e.dst").alias("node"))
             .distinct()
         )
-        new_pairs = grown.join(reached, ["seed", "node"], "left_anti").localCheckpoint(
-            eager=True
+        new_pairs = (
+            grown.join(reached, ["seed", "node"], "left_anti")
+            .withColumn("hop", F.lit(hop))
+            .localCheckpoint(eager=True)
         )
         if new_pairs.isEmpty():
             break
-        reached = reached.unionByName(new_pairs).localCheckpoint(eager=True)
+        reached = reached.unionByName(new_pairs)
         frontier = new_pairs
     return reached
+
+
+def _symmetric_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The distinct directed edge set of the undirected view:
+    (src, dst) ∪ (dst, src), as columns ``src``/``dst``. Returned uncut;
+    each caller picks its own lineage cut."""
+    fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    return fwd.unionByName(
+        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
 
 
 def _rank_inputs(
@@ -137,6 +164,22 @@ def _rank_inputs(
         outdeg.select(F.col("node").alias("___src"), "___out"), "___src"
     ).localCheckpoint(eager=False)
     return nodes, outdeg, e
+
+
+def _spread(ranks: DataFrame, e: DataFrame) -> DataFrame:
+    """One rank sweep's spread Σ_{u→v} round(p(u)/out(u), 9) as (node,
+    ___s): ``ranks`` (node, pr) joined to the ``_rank_inputs`` edges
+    (___src, ___dst, ___out), each contribution 9dp-rounded before the
+    map-side-combined sum. Nodes without in-edges are absent."""
+    return (
+        ranks.join(e, ranks["node"] == e["___src"])
+        .select(
+            F.col("___dst").alias("node"),
+            F.round(F.col("pr") / F.col("___out"), 9).alias("___c"),
+        )
+        .groupBy("node")
+        .agg(F.sum("___c").alias("___s"))
+    )
 
 
 def pagerank(
@@ -187,21 +230,14 @@ def pagerank(
     for _ in range(iterations):
         if redistribute_dangling:
             # The rank iterate is consumed TWICE per sweep here (the
-            # contribs join and the dangling-mass anti-join aggregate),
+            # spread join and the dangling-mass anti-join aggregate),
             # so without a lineage cut the plan tree doubles each
             # iteration (2^iterations copies of the sweep subtree) —
             # the exact dual-consumer shape hits() already guards
             # (r7 advice). Lazy, so plan building stays job-free; the
             # simple variant has a single consumer and needs no cut.
             ranks = ranks.localCheckpoint(eager=False)
-        contribs = (
-            ranks.join(e, ranks["node"] == e["___src"])
-            .select(
-                F.col("___dst").alias("node"),
-                F.round(F.col("pr") / F.col("___out"), 9).alias("___c"),
-            )
-        )
-        summed = contribs.groupBy("node").agg(F.sum("___c").alias("___s"))
+        summed = _spread(ranks, e)
         if redistribute_dangling:
             dang = ranks.join(outdeg, "node", "left_anti").agg(
                 F.round(
@@ -484,15 +520,8 @@ def label_propagation(
     # driver-blocking jobs. und is multi-consumed (every sweep) and
     # labels single-consumed (next sweep) — both materialize exactly
     # once either way.
-    und = (
-        edges.select(F.col(left).alias("a"), F.col(right).alias("b"))
-        .unionByName(
-            edges.select(F.col(right).alias("a"), F.col(left).alias("b"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    labels = und.select(F.col("a").alias("node")).distinct().select(
+    und = _symmetric_edges(edges, left, right).localCheckpoint(eager=False)
+    labels = und.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("community")
     ).localCheckpoint(eager=False)
     w = Window.partitionBy("node").orderBy(
@@ -502,12 +531,12 @@ def label_propagation(
         freq = (
             und.join(
                 labels.select(
-                    F.col("node").alias("b"),
+                    F.col("node").alias("dst"),
                     F.col("community"),
                 ),
-                "b",
+                "dst",
             )
-            .groupBy(F.col("a").alias("node"), "community")
+            .groupBy(F.col("src").alias("node"), "community")
             .agg(F.count(F.lit(1)).alias("___n"))
         )
         labels = (
@@ -780,55 +809,25 @@ def bfs_layers(
     only asks boolean reachability, /root/reference/airflow/dags/
     create_custom.py's ontology walk).
 
-    Integer-exact throughout. The frontier loop is the Pregel shape:
-    each sweep joins ONLY the new frontier against the edge table
-    (never the accumulated visited set), anti-joins out already-seen
-    nodes, and cuts lineage with an eager localCheckpoint — per-sweep
-    work is O(frontier-adjacent edges), total O(|E|) across all
-    sweeps, shuffle keyed on node id. At 100 TB the edge table would
-    be bucketed by src so every sweep's join is co-located
-    (exchange-free after the first); max_hops bounds the sweep count
-    exactly like kcore_stats' fixed peels.
+    Integer-exact throughout. Runs :func:`_expand` (frontier-only
+    joins, per-sweep work O(frontier-adjacent edges)) from one shared
+    seed id over the eagerly cut symmetric edge set, so a pair's
+    ``hop`` is the sweep that first reached its node; ``max_hops``
+    bounds the sweep count exactly like kcore_stats' fixed peels.
     """
-    fwd = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    und = (
-        fwd.unionByName(fwd.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    dist = (
+    und = _symmetric_edges(edges, src, dst).localCheckpoint(eager=True)
+    # the seed id and hop are literals above the cut: the first sweep's
+    # join (on node) and anti-join (on seed, node) then shuffle the seed
+    # set once; a checkpointed seed column measured one job more
+    start = (
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()
-        .withColumn("hop", F.lit(0))
         .localCheckpoint(eager=True)
+        .select(F.lit(0).alias("seed"), "node", F.lit(0).alias("hop"))
     )
-    frontier = dist
-    for h in range(1, max_hops + 1):
-        grown = (
-            frontier.join(und, frontier["node"] == und["s"])
-            .select(und["d"].alias("node"))
-            .distinct()
-        )
-        fresh = (
-            grown.join(dist, "node", "left_anti")
-            .withColumn("hop", F.lit(h))
-            .localCheckpoint(eager=True)
-        )
-        if fresh.isEmpty():
-            break
-        # dist is a pure union of ALREADY-checkpointed leaves (seed set
-        # + every sweep's fresh) — re-checkpointing the union each
-        # sweep was one extra driver-blocking job per sweep that only
-        # re-wrote bytes already sitting in block storage (r16; the
-        # r15 A/B that rejected removing the FRESH checkpoint measured
-        # lineage recompute, a different cut). Union is partition
-        # concatenation: consumers rescan the cached leaf blocks, and
-        # the partition count is bounded by the same AQE byte sizing
-        # that sized each leaf.
-        dist = dist.unionByName(fresh)
-        frontier = fresh
     return (
-        dist.groupBy("hop")
+        _expand(start, und, max_hops)
+        .groupBy("hop")
         .agg(F.count(F.lit(1)).alias("n_nodes"))
         .orderBy("hop")
     )
@@ -856,7 +855,7 @@ def weighted_sssp(
     with no rounding anywhere (the repo has no float-min determinism
     story and doesn't need one here).
 
-    Scale shape: the Pregel loop of :func:`bfs_layers` with a weight
+    Scale shape: the Pregel loop of :func:`_expand` with a weight
     accumulator — per sweep ONE frontier⋈edges shuffle keyed on node
     id, a map-side-combined min per dst, and an improvement anti-check
     against the running dist table; eager localCheckpoints cut the
@@ -973,14 +972,7 @@ def personalized_pagerank(
     ranks = base.select("node", F.col("___r").alias("pr"))
     d = float(damping)
     for _ in range(iterations):
-        contribs = (
-            ranks.join(e, ranks["node"] == e["___src"])
-            .select(
-                F.col("___dst").alias("node"),
-                F.round(F.col("pr") / F.col("___out"), 9).alias("___c"),
-            )
-        )
-        summed = contribs.groupBy("node").agg(F.sum("___c").alias("___s"))
+        summed = _spread(ranks, e)
         ranks = (
             base.join(summed, "node", "left")
             .select(

@@ -36,8 +36,11 @@ def search_corpus(
 ) -> DataFrame:
     """Top-k docs for a whitespace-tokenized query.
 
-    score = Σ_t tf(t, doc) · ln((N+1)/(df_t+1))  [+ rank_boost · log2(1+rank)]
-    Deterministic: ranking on 6dp-rounded score with id tie-break.
+    score = Σ_t tf(t, doc) · round(ln((N+1)/(df_t+1)), 9)
+            [+ rank_boost · log2(1+rank)]
+    Deterministic: idf is rounded 9dp before the tf product (as in
+    :func:`search_tfidf_cosine`, so libm and java.lang.Math log agree);
+    ranking on 6dp-rounded score with id tie-break.
     """
     terms = [t for t in query.lower().split() if t]
 
@@ -61,9 +64,12 @@ def search_corpus(
 
     score = None
     for i, t in enumerate(terms):
-        idf_t = F.log(
-            (F.col("__n").cast("double") + F.lit(1.0))
-            / (F.col(f"__df_{i}").cast("double") + F.lit(1.0))
+        idf_t = F.round(
+            F.log(
+                (F.col("__n").cast("double") + F.lit(1.0))
+                / (F.col(f"__df_{i}").cast("double") + F.lit(1.0))
+            ),
+            9,
         )
         part = _term_tf(F.col(text_col), t) * idf_t
         score = part if score is None else score + part

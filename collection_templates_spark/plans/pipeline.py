@@ -17,6 +17,7 @@ doubles as checkpointing + lineage truncation.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -80,15 +81,13 @@ def run_pipeline(
 
     def persist(df: DataFrame, name: str) -> DataFrame:
         if workdir:
-            import time as _time
-
             path = f"{workdir}/{name}.parquet"
-            t0 = _time.time()
+            t0 = time.perf_counter()
             df.write.mode("overwrite").parquet(path)
             # wall time to materialize this stage (upstream lazy work
             # included) — surfaced via the returned dict's ___stage_seconds
             # so stress/ops runs can see WHERE a big input spends its time
-            stage_seconds[name] = round(_time.time() - t0, 2)
+            stage_seconds[name] = round(time.perf_counter() - t0, 2)
             return spark.read.parquet(path)
         return df
 

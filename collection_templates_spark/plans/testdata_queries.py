@@ -7298,9 +7298,10 @@ ORACLE_SQL: dict[str, str] = {
             FROM tf
         ), scored AS (
             SELECT doc_id,
-                   round(tf_spark * ln((n + 1.0) / (df_spark + 1.0))
-                       + tf_hash * ln((n + 1.0) / (df_hash + 1.0))
-                       + tf_join * ln((n + 1.0) / (df_join + 1.0)), 6) AS score
+                   round(tf_spark * round(ln((n + 1.0) / (df_spark + 1.0)), 9)
+                       + tf_hash * round(ln((n + 1.0) / (df_hash + 1.0)), 9)
+                       + tf_join * round(ln((n + 1.0) / (df_join + 1.0)), 9), 6)
+                       AS score
             FROM tf, stats
         )
         SELECT doc_id, rank, score FROM (

@@ -169,25 +169,6 @@ def test_kaplan_meier_textbook(spark):
     assert out[1].d_events == 1 and out[1].c_censored == 0
 
 
-def test_bfs_layers_path_graph(spark):
-    # path a-b-c-d-e (directed edges stored one way; BFS is undirected),
-    # seed c: layers 0:{c} 1:{b,d} 2:{a,e}
-    from collection_templates_spark.operators.graph import bfs_layers
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")],
-        "src string, dst string",
-    )
-    seeds = spark.createDataFrame([("c",)], "node string")
-    out = {r.hop: r.n_nodes for r in bfs_layers(
-        edges, seeds, max_hops=2).collect()}
-    assert out == {0: 1, 1: 2, 2: 2}
-    # max_hops truncates: 1 hop stops at b/d
-    out1 = {r.hop: r.n_nodes for r in bfs_layers(
-        edges, seeds, max_hops=1).collect()}
-    assert out1 == {0: 1, 1: 2}
-
-
 def test_profile_table_basics(spark):
     from collection_templates_spark.operators.profiling import (
         profile_table,

@@ -8,7 +8,6 @@ import random
 from pyspark.sql import functions as F
 
 from collection_templates_spark.operators.drift import psi_drift
-from collection_templates_spark.operators.graph import bfs_layers
 from collection_templates_spark.operators.privacy import (
     k_anonymity_histogram,
 )
@@ -186,29 +185,6 @@ def test_k_anonymity_rows_conserved(spark):
     out = k_anonymity_histogram(df, ["a", "b"], "sens").collect()
     assert sum(r.n_rows for r in out) == 300
     assert all(1 <= r.min_l_diversity <= r.class_size for r in out)
-
-
-def test_bfs_layers_conservation_and_monotone_frontier(spark):
-    rng = random.Random(149)
-    nodes = [f"n{i}" for i in range(60)]
-    edges = [
-        (rng.choice(nodes), rng.choice(nodes)) for _ in range(150)
-    ]
-    edf = spark.createDataFrame(edges, "src string, dst string")
-    seeds = spark.createDataFrame([("n0",), ("n1",)], "node string")
-    out = {r.hop: r.n_nodes for r in bfs_layers(
-        edf, seeds, max_hops=6).collect()}
-    assert out[0] == 2
-    # every node counted at most once across layers
-    assert sum(out.values()) <= len(nodes)
-    # larger hop budget can only reach MORE nodes
-    out3 = {r.hop: r.n_nodes for r in bfs_layers(
-        edf, seeds, max_hops=3).collect()}
-    assert sum(out3.values()) <= sum(out.values())
-    # shared prefix identical
-    for h in out3:
-        if h < 3:
-            assert out3[h] == out[h]
 
 
 def test_calibration_weighted_mean_identity(spark):

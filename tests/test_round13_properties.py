@@ -222,41 +222,6 @@ def test_mutual_information_identities(spark):
     assert out["copy"].k_x == 2 and out["copy"].k_y == 2
 
 
-def test_weighted_sssp_brute_force(spark):
-    """Frontier Bellman–Ford equals the Python ≤k-hop DP on a random
-    weighted graph, including unreachable nodes staying absent."""
-    from collection_templates_spark.operators.graph import weighted_sssp
-
-    rng = random.Random(233)
-    n = 30
-    edges = [
-        (f"n{rng.randrange(n)}", f"n{rng.randrange(n)}", rng.randint(1, 9))
-        for _ in range(60)
-    ]
-    max_hops = 3
-    out = {
-        r.node: r.dist
-        for r in weighted_sssp(
-            spark.createDataFrame(edges, "src string, dst string, w long"),
-            spark.createDataFrame([("n0",), ("n1",)], "node string"),
-            max_hops=max_hops,
-        ).collect()
-    }
-    # Python DP over undirected min-weight edge set
-    und = {}
-    for s, d, w in edges:
-        for a, b in ((s, d), (d, s)):
-            und[(a, b)] = min(und.get((a, b), w), w)
-    dist = {"n0": 0, "n1": 0}
-    for _ in range(max_hops):
-        new = dict(dist)
-        for (a, b), w in und.items():
-            if a in dist and dist[a] + w < new.get(b, float("inf")):
-                new[b] = dist[a] + w
-        dist = new
-    assert out == dist
-
-
 def test_lttb_downsample_brute_force(spark):
     """One point per bucket; boundary buckets keep first/last point;
     interior buckets keep the brute-force max-area point."""
