@@ -18,7 +18,8 @@ from pyspark.sql import functions as F
 def extract_collections(
     db3: DataFrame, id_title: DataFrame, mode: str
 ) -> DataFrame:
-    """Collections of a mode with their type lists and article titles.
+    """Collections of a mode with their type lists and article titles, each
+    row tagged with its ``mode`` so the modes can share one frame.
 
     J1: inner join — collections whose qid has no en-wiki article drop out
     (the reference's KeyError skip, create_collections.py:52-72).
@@ -41,7 +42,7 @@ def extract_collections(
               side.item == F.col("qid"), "inner")
         .drop("qid")
         .filter(keep)
-        .select("item", "type", "article")
+        .select(F.lit(mode).alias("mode"), "item", "type", "article")
     )
 
 
@@ -102,7 +103,7 @@ def group_members(
     """A2 + J5: group member edges per collection title and join collection
     metadata. Members keep first-seen order via a deterministic sort (the
     reference's sorted-file order); underscores → spaces applied to members
-    (create_collections.py:508)."""
+    (create_collections.py:508). The collections' ``mode`` tag is kept."""
     grouped = (
         edges.groupBy(normalize_article_key(F.col("collection_title")).alias("key"))
         .agg(F.array_sort(F.collect_list("member_title")).alias("members"))
@@ -110,5 +111,5 @@ def group_members(
     meta = collections.withColumn("key", normalize_article_key(F.col("article")))
     return (
         meta.join(grouped, "key", "inner")
-        .select("item", "type", "article", "members")
+        .select("mode", "item", "type", "article", "members")
     )

@@ -18,6 +18,7 @@ AQE-handled. Everything UDF-shaped is bounded by distinct label count.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
@@ -67,15 +68,20 @@ def enrich_members(
     ``udfs.interesting_score_udf_for(freqs_bc)`` for real corpus-model
     scoring (langmodel.py).
 
-    validated: item, type, article, members array<struct(qid,title)>, counts.
-    qrank: (id, rank); domains: (name, status) with .eth already stripped.
-    Returns: item, member struct rows (curated, tokenized,
+    validated: mode, item, type, article, members array<struct(qid,title)>,
+    counts. qrank: (id, rank); domains: (name, status) with .eth already
+    stripped. Returns: mode, item, member struct rows (curated, tokenized,
     interesting_score, rank, status) — invalid/uncurable members dropped
     (reference drops members where even the label fallback fails).
     """
     m = validated.select(
-        "item", F.explode("members").alias("mm")
-    ).select("item", F.col("mm.qid").alias("member_qid"), F.col("mm.title").alias("member_title"))
+        "mode", "item", F.explode("members").alias("mm")
+    ).select(
+        "mode",
+        "item",
+        F.col("mm.qid").alias("member_qid"),
+        F.col("mm.title").alias("member_title"),
+    )
 
     # primary curation on the member title
     m = compute_on_distinct(m, "member_title", curate_member_udf, "c1")
@@ -117,6 +123,7 @@ def enrich_members(
     d = domains.select(F.col("name").alias("___dn"), F.col("status"))
     m = m.join(d, m["c.curated"] == F.col("___dn"), "left")
     return m.select(
+        "mode",
         "item",
         F.struct(
             F.col("c.curated").alias("curated"),
@@ -133,8 +140,8 @@ def enrich_members(
 def assemble_members(member_rows: DataFrame) -> DataFrame:
     """Sort by the log-rank key desc (ties: curated asc for determinism —
     the reference relies on stable sort of file order), dedup keep-first by
-    curated (O6), regroup to arrays."""
-    w_dedup = Window.partitionBy("item", "member.curated").orderBy(
+    curated (O6), regroup to arrays; a collection is keyed by (mode, item)."""
+    w_dedup = Window.partitionBy("mode", "item", "member.curated").orderBy(
         F.desc("key"), F.asc("member.rank")
     )
     rows = (
@@ -144,7 +151,7 @@ def assemble_members(member_rows: DataFrame) -> DataFrame:
         .withColumn("rn", F.row_number().over(w_dedup))
         .filter(F.col("rn") == 1)
     )
-    return rows.groupBy("item").agg(
+    return rows.groupBy("mode", "item").agg(
         ordered_list(F.col("member"), -F.col("key"), F.col("member.curated")).alias(
             "members"
         )
@@ -160,11 +167,22 @@ def enrich_collections(
     score_cache_path: str | None = None,
     score_udf=None,
 ) -> DataFrame:
-    """Full all-info stage → COLLECTION_SCHEMA rows.
+    """Full all-info stage → COLLECTION_SCHEMA rows plus the ``mode`` column.
 
+    validated: output of ``validate_members``, both collection modes in one
+    frame, keyed by ``(mode, item)``; member and type data stay per
+    collection, while the QID-keyed lookups (db5 aux data, qrank,
+    keywords) are computed once for both modes.
     mapping_titles: (qid, title) INCLUDING redirects — the keyword source
     (J10).
-    score_cache_path: optional persisted interesting-score cache (Opt-6).
+    score_cache_path: optional persisted interesting-score cache (Opt-6),
+    refreshed once per call with the curated keys of every mode.
+
+    The result is cut eagerly at DISK_ONLY before it is returned, for the
+    same reason as in ``validate_members``: the pipeline writes it once per
+    mode, and each write would otherwise re-run the enrichment plan. The
+    table is corpus-sized, hence DISK_ONLY, and the cut runs inside this
+    stage call so its jobs count towards this stage.
     """
     members = assemble_members(
         enrich_members(
@@ -173,20 +191,25 @@ def enrich_collections(
     )
 
     coll = validated.select(
-        "item", "type", "article", "valid_members_count", "invalid_members_count"
+        "mode",
+        "item",
+        "type",
+        "article",
+        "valid_members_count",
+        "invalid_members_count",
     )
     # collection name (F1) on distinct articles
     coll = compute_on_distinct(coll, "article", curate_name_udf, "___name")
 
     # type labels (J9): explode type ids, left join db5 label, regroup
     types = (
-        coll.select("item", F.explode("type").alias("tid"))
+        coll.select("mode", "item", F.explode("type").alias("tid"))
         .join(
             db5.select(F.col("id").alias("tid"), F.col("label").alias("tlabel")),
             "tid",
             "left",
         )
-        .groupBy("item")
+        .groupBy("mode", "item")
         .agg(
             F.array_sort(
                 F.collect_list(
@@ -195,7 +218,7 @@ def enrich_collections(
             ).alias("types")
         )
     )
-    coll = coll.join(types, "item", "left")
+    coll = coll.join(types, ["mode", "item"], "left")
 
     # db5 aux data for the collection itself (J9)
     aux = db5.select(
@@ -225,7 +248,8 @@ def enrich_collections(
     q = qrank.select(F.col("id").alias("item"), F.col("rank").alias("___crank"))
     coll = coll.join(q, "item", "left")
 
-    out = coll.join(members, "item", "left").select(
+    out = coll.join(members, ["mode", "item"], "left").select(
+        "mode",
         "item",
         F.coalesce("types", F.array().cast(ArrayType(TYPE_SCHEMA))).alias("types"),
         "article",
@@ -249,4 +273,4 @@ def enrich_collections(
     # remove the collection's own name from keywords (create_merged.py:456)
     return out.withColumn(
         "keywords", F.array_remove(F.col("keywords"), F.coalesce(F.col("name"), F.lit("")))
-    )
+    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)

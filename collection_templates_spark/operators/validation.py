@@ -25,6 +25,7 @@ handles the final semi-join.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -43,10 +44,11 @@ def resolve_member_qids(
     ``title_qid``: (title, qid) from the `about` triples (URL-quoted,
     underscore form — reference quotes the title before lookup,
     create_collections.py:671). ``mapping_qid`` optional wikimapper fallback.
-    Returns one row per (collection, member): item, type, article,
+    Returns one row per (collection, member): mode, item, type, article,
     member_qid, member_title.
     """
     member = grouped.select(
+        "mode",
         "item",
         "type",
         "article",
@@ -70,7 +72,7 @@ def resolve_member_qids(
     return (
         out.withColumn("member_qid", qid)
         .filter(F.col("member_qid").isNotNull())
-        .select("item", "type", "article", "member_qid", "member_title")
+        .select("mode", "item", "type", "article", "member_qid", "member_title")
     )
 
 
@@ -99,10 +101,19 @@ def validate_members(
 ) -> DataFrame:
     """J13 end-to-end: per-collection valid member lists + counts.
 
-    ``resolved``: output of ``resolve_member_qids``. Returns COLLECTION_SCHEMA
-    -compatible core columns: item, type (filtered), article,
-    members (array<struct(qid, title)>), valid/invalid counts. Collections
-    left without types after the Q13406463 removal are dropped (P10).
+    ``resolved``: output of ``resolve_member_qids``, both collection modes
+    in one frame. A collection is keyed by ``(mode, item)``: one QID can be
+    a category collection and a list collection at once, and the two keep
+    separate members and counts. Returns COLLECTION_SCHEMA-compatible core
+    columns: mode, item, type (filtered), article, members
+    (array<struct(qid, title)>), valid/invalid counts. Collections left
+    without types after the Q13406463 removal are dropped (P10).
+
+    The result is cut eagerly at DISK_ONLY before it is returned: the
+    pipeline writes it once per mode, and without the cut each of those
+    writes would re-run the whole validation plan. DISK_ONLY because the
+    table is corpus-sized. The cut runs here, inside the stage call, so
+    its jobs count towards this stage.
     """
     coll = resolved.withColumn(
         "type_ids",
@@ -153,38 +164,36 @@ def validate_members(
         "member_qid", F.explode("entries").alias("entry")
     )
 
-    # (member_qid, seed) pairs: member has some type that reaches seed
+    # (member_qid, want) pairs: member has some type that reaches the
+    # collection type ``want``
     valid_pairs = (
         entries.join(reach, entries.entry == reach.node)
-        .select("member_qid", "seed")
+        .select("member_qid", F.col("seed").alias("want"))
         .distinct()
     )
 
     # member valid for its collection if any of the collection's type_ids
-    # matches a seed the member reaches
+    # is a type the member reaches
     exploded = coll.select(
-        "item", "type_ids", "article", "member_qid", "member_title",
+        "mode", "item", "member_qid", "member_title",
         F.explode("type_ids").alias("want"),
     )
     hits = (
-        exploded.join(
-            valid_pairs,
-            (exploded.member_qid == valid_pairs.member_qid)
-            & (exploded.want == valid_pairs.seed),
-            "left_semi",
-        )
-        .select("item", "member_qid", "member_title")
+        exploded.join(valid_pairs, ["member_qid", "want"], "left_semi")
+        .select("mode", "item", "member_qid", "member_title")
         .distinct()
         .withColumn("is_valid", F.lit(1))
     )
     flagged = (
-        coll.select("item", "type_ids", "article", "member_qid", "member_title")
+        coll.select(
+            "mode", "item", "type_ids", "article", "member_qid", "member_title"
+        )
         .distinct()
-        .join(hits, ["item", "member_qid", "member_title"], "left")
+        .join(hits, ["mode", "item", "member_qid", "member_title"], "left")
         .withColumn("is_valid", F.coalesce("is_valid", F.lit(0)))
     )
     return (
-        flagged.groupBy("item")
+        flagged.groupBy("mode", "item")
         .agg(
             F.first("type_ids").alias("type"),
             F.first("article").alias("article"),
@@ -202,4 +211,5 @@ def validate_members(
             F.sum("is_valid").alias("valid_members_count"),
             F.sum(1 - F.col("is_valid")).alias("invalid_members_count"),
         )
+        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     )

@@ -13,14 +13,26 @@ Stage order (SURVEY §3.1; reference DAG files in airflow/dags/):
 Each stage returns a DataFrame; ``run_pipeline`` optionally persists every
 boundary as Parquet (the reference's JSONL boundaries, S10) which at scale
 doubles as checkpointing + lineage truncation.
+
+The two collection modes (category and list) differ only in stage 3, the
+extraction and the member-edge source. Stages 3-5 therefore run once over
+both modes: each mode's grouped collections carry a ``mode`` column, the
+modes are unioned, and resolution, validation and enrichment run once on
+the union (one ontology BFS, one score-cache refresh, one keyword
+curation). A collection is keyed by ``(mode, item)`` throughout, since one
+QID can be a collection in both modes. The boundaries are still written
+per mode (``validated_{mode}``, ``all_info_{mode}``, ``mode`` dropped), and
+the merge of stage 6 takes the two modes' frames as before.
 """
 
 from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from collection_templates_spark.operators.collections_extract import (
     extract_collections,
@@ -47,6 +59,8 @@ from collection_templates_spark.operators.validation import (
     validate_members,
 )
 from collection_templates_spark.sources.ntriples import parse_ntriples
+
+MODES = ("category", "list")
 
 
 @dataclass
@@ -127,42 +141,55 @@ def run_pipeline(
     # reference keys these stores with the on-disk underscore form
     id_title = title_qid.select("qid", "title")
 
-    out = {}
-    for mode in ("category", "list"):
-        colls = extract_collections(stores["db3"], id_title, mode)
-        if mode == "category":
-            edges = member_edges_categories(
-                inputs.categorylinks,
-                inputs.mapping.select("wikipedia_id", "title"),
+    def persist_modes(df: DataFrame, stage: str) -> dict[str, DataFrame]:
+        """Write each mode of a mode-tagged union to ``{stage}_{mode}``
+        (``mode`` dropped: the one-mode schema) and return the frames."""
+        return {
+            mode: persist(
+                df.filter(F.col("mode") == mode).drop("mode"), f"{stage}_{mode}"
             )
-        else:
-            edges = member_edges_lists(
-                inputs.pagelinks,
-                inputs.mapping.select("wikipedia_id", "title"),
-            )
-        grouped = group_members(edges, colls)
-        resolved = resolve_member_qids(
-            grouped, title_qid, inputs.mapping.select("title", "qid")
+            for mode in MODES
+        }
+
+    def tagged(parts: dict[str, DataFrame]) -> DataFrame:
+        """The per-mode frames re-tagged with ``mode`` and unioned."""
+        return reduce(
+            DataFrame.unionByName,
+            (df.select(F.lit(mode).alias("mode"), "*") for mode, df in parts.items()),
         )
-        validated = persist(
-            validate_members(resolved, stores["db2"], stores["db6"]),
-            f"validated_{mode}",
-        )
-        enriched = persist(
-            enrich_collections(
-                validated,
-                stores["db5"],
-                inputs.qrank,
-                inputs.domains,
-                inputs.mapping.select("qid", "title"),
-                score_cache_path=(
-                    f"{workdir}/score_cache.parquet" if workdir else None
-                ),
-                score_udf=score_udf,
+
+    pages = inputs.mapping.select("wikipedia_id", "title")
+    edges = {
+        "category": member_edges_categories(inputs.categorylinks, pages),
+        "list": member_edges_lists(inputs.pagelinks, pages),
+    }
+    grouped = reduce(
+        DataFrame.unionByName,
+        (
+            group_members(edges[mode], extract_collections(stores["db3"], id_title, mode))
+            for mode in MODES
+        ),
+    )
+    resolved = resolve_member_qids(
+        grouped, title_qid, inputs.mapping.select("title", "qid")
+    )
+    validated = persist_modes(
+        validate_members(resolved, stores["db2"], stores["db6"]), "validated"
+    )
+    out = persist_modes(
+        enrich_collections(
+            tagged(validated),
+            stores["db5"],
+            inputs.qrank,
+            inputs.domains,
+            inputs.mapping.select("qid", "title"),
+            score_cache_path=(
+                f"{workdir}/score_cache.parquet" if workdir else None
             ),
-            f"all_info_{mode}",
-        )
-        out[mode] = enriched
+            score_udf=score_udf,
+        ),
+        "all_info",
+    )
 
     merged = merge_lists_and_categories(out["list"], out["category"], stores["db4"])
     merged = persist(merged, "merged")

@@ -66,9 +66,9 @@ QRANK = [("Q1", 5000), ("Q2", 300), ("Q100", 77)]
 DOMAINS = [("thewall", "taken"), ("animals", "available")]
 
 
-def _inputs(spark, categorylinks=CATEGORYLINKS, pagelinks=PAGELINKS, **kw):
+def _inputs(spark, categorylinks=CATEGORYLINKS, pagelinks=PAGELINKS, nt=NT, **kw):
     return PipelineInputs(
-        nt_lines=spark.createDataFrame([(x,) for x in NT], ["value"]),
+        nt_lines=spark.createDataFrame([(x,) for x in nt], ["value"]),
         categorylinks=spark.createDataFrame(
             categorylinks, "cl_from bigint, cl_to string"
         ),
@@ -142,6 +142,31 @@ def test_degenerate_inputs(spark, tmp_path):
     assert doc.metadata.id == "Q100" and not doc.template.is_merged
     ops = {r.id: r.op for r in result["operations"].collect()}
     assert ops == {"Q100": "insert"}
+
+
+def test_collection_in_both_modes(spark, tmp_path):
+    """A QID that is a category collection and a list collection at once
+    keeps one row per mode, each with that mode's own members and counts:
+    collections are keyed by (mode, item), never by item alone."""
+    # Q100 is also a list of albums; page 99 (its mapped page) links to
+    # a person and an album
+    nt = NT + [f"{WD}Q100> {P}P360> {WD}Q482994> ."]
+    pagelinks = PAGELINKS + [(99, "Roger_Waters"), (99, "The_Wall")]
+    run_pipeline(
+        spark, _inputs(spark, pagelinks=pagelinks, nt=nt), workdir=str(tmp_path)
+    )
+
+    def counts(stage):
+        return sorted(
+            tuple(r) for r in spark.read.parquet(str(tmp_path / f"{stage}.parquet"))
+            .select("item", "valid_members_count", "invalid_members_count")
+            .collect()
+        )
+
+    assert counts("validated_category") == [("Q100", 3, 1)]
+    assert counts("validated_list") == [("Q100", 1, 1), ("Q200", 2, 1)]
+    assert counts("all_info_category") == [("Q100", 3, 1)]
+    assert counts("all_info_list") == [("Q100", 1, 1), ("Q200", 2, 1)]
 
 
 @pytest.mark.slow

@@ -13,6 +13,7 @@ def _validated(spark):
     return spark.createDataFrame(
         [
             (
+                "category",
                 "Q1",
                 ["T1"],
                 "Category:Things",
@@ -27,7 +28,7 @@ def _validated(spark):
                 1,
             )
         ],
-        "item string, type array<string>, article string,"
+        "mode string, item string, type array<string>, article string,"
         " members array<struct<qid:string,title:string>>,"
         " valid_members_count bigint, invalid_members_count bigint",
     )
@@ -88,8 +89,8 @@ def test_image_urls_unquoted(spark):
         " image array<string>, page_banner array<string>",
     )
     validated = spark.createDataFrame(
-        [("Q1", ["T1"], "Category:Things", [], 0, 0)],
-        "item string, type array<string>, article string,"
+        [("category", "Q1", ["T1"], "Category:Things", [], 0, 0)],
+        "mode string, item string, type array<string>, article string,"
         " members array<struct<qid:string,title:string>>,"
         " valid_members_count bigint, invalid_members_count bigint",
     )
@@ -123,10 +124,10 @@ def test_keywords_from_mapping_titles(spark):
     curated with curate_name, sorted, minus the collection's own name."""
     validated = spark.createDataFrame(
         [
-            ("Q1", [], "Category:Things", [], 0, 0),
-            ("Q2", [], "Category:Empty", [], 0, 0),
+            ("category", "Q1", [], "Category:Things", [], 0, 0),
+            ("category", "Q2", [], "Category:Empty", [], 0, 0),
         ],
-        "item string, type array<string>, article string,"
+        "mode string, item string, type array<string>, article string,"
         " members array<struct<qid:string,title:string>>,"
         " valid_members_count bigint, invalid_members_count bigint",
     )

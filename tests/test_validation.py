@@ -36,7 +36,7 @@ def test_reachability_chain_diamond_cycle(spark):
     assert ("E", "X") not in reach
 
 
-def test_validate_members_with_redirect(spark):
+def _redirect_case(spark):
     # collection CAT of type T; members M1 (instance_of A, A->..->T via chain)
     # M2 (instance_of Z, unrelated), M3 redirects to M1's class
     db2 = _db2(spark, [
@@ -47,13 +47,18 @@ def test_validate_members_with_redirect(spark):
     db6 = _db6(spark, [("M3", "M1")])
     resolved = spark.createDataFrame(
         [
-            ("Q100", ["T"], "Category:Things", "M1", "One"),
-            ("Q100", ["T"], "Category:Things", "M2", "Two"),
-            ("Q100", ["T"], "Category:Things", "M3", "Three"),
+            ("category", "Q100", ["T"], "Category:Things", "M1", "One"),
+            ("category", "Q100", ["T"], "Category:Things", "M2", "Two"),
+            ("category", "Q100", ["T"], "Category:Things", "M3", "Three"),
         ],
-        "item string, type array<string>, article string, member_qid string,"
-        " member_title string",
+        "mode string, item string, type array<string>, article string,"
+        " member_qid string, member_title string",
     )
+    return resolved, db2, db6
+
+
+def test_validate_members_with_redirect(spark):
+    resolved, db2, db6 = _redirect_case(spark)
     out = validate_members(resolved, db2, db6).collect()
     assert len(out) == 1
     row = out[0]
@@ -63,12 +68,57 @@ def test_validate_members_with_redirect(spark):
     assert row.invalid_members_count == 1
 
 
+def test_validate_members_without_self_join_resolution(spark):
+    """The member-to-type semi-join must name its keys on both sides: with
+    Spark's self-join auto-resolution off, a predicate built from the shared
+    ``member_qid`` attribute folds to true and validates every member."""
+    conf = "spark.sql.selfJoinAutoResolveAmbiguity"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        resolved, db2, db6 = _redirect_case(spark)
+        [row] = validate_members(resolved, db2, db6).collect()
+    finally:
+        spark.conf.set(conf, before)
+    assert row.valid_members_count == 2
+    assert row.invalid_members_count == 1
+
+
+def test_validate_members_keyed_by_mode(spark):
+    """One QID that is a collection in both modes, with disjoint members,
+    gives one row per mode with that mode's own members and counts."""
+    db2 = _db2(spark, [
+        ("A", [], ["T"]),
+        ("M1", ["A"], []), ("M2", ["Z"], []),
+        ("M3", ["T"], []), ("M4", ["A"], []), ("M5", ["Z"], []),
+    ])
+    resolved = spark.createDataFrame(
+        [
+            ("category", "Q7", ["T"], "Category:Things", "M1", "One"),
+            ("category", "Q7", ["T"], "Category:Things", "M2", "Two"),
+            ("list", "Q7", ["T"], "Category:Things", "M3", "Three"),
+            ("list", "Q7", ["T"], "Category:Things", "M4", "Four"),
+            ("list", "Q7", ["T"], "Category:Things", "M5", "Five"),
+        ],
+        "mode string, item string, type array<string>, article string,"
+        " member_qid string, member_title string",
+    )
+    out = {r.mode: r for r in validate_members(resolved, db2).collect()}
+    assert set(out) == {"category", "list"}
+    assert all(r.item == "Q7" for r in out.values())
+    cat, lst = out["category"], out["list"]
+    assert [m.qid for m in cat.members] == ["M1"]
+    assert (cat.valid_members_count, cat.invalid_members_count) == (1, 1)
+    assert sorted(m.qid for m in lst.members) == ["M3", "M4"]
+    assert (lst.valid_members_count, lst.invalid_members_count) == (2, 1)
+
+
 def test_typeless_collection_dropped(spark):
     db2 = _db2(spark, [("M1", ["A"], [])])
     resolved = spark.createDataFrame(
-        [("Q1", ["Q13406463"], "List_of_x", "M1", "One")],
-        "item string, type array<string>, article string, member_qid string,"
-        " member_title string",
+        [("list", "Q1", ["Q13406463"], "List_of_x", "M1", "One")],
+        "mode string, item string, type array<string>, article string,"
+        " member_qid string, member_title string",
     )
     assert validate_members(resolved, db2).count() == 0  # P10
 
