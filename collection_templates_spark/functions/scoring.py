@@ -16,7 +16,6 @@
 
 from __future__ import annotations
 
-import math
 import random
 
 from pyspark.sql import Column
@@ -43,11 +42,6 @@ def ordered_list(value: Column, *order: Column) -> Column:
 
 def clamp_min(col: Column, minimum: float = MIN_VALUE) -> Column:
     return F.greatest(col, F.lit(minimum))
-
-
-def member_sort_key_py(rank: int | None, curated: str) -> float:
-    r = rank or 0
-    return math.log(r + 1, 2) / max(len(curated), 10)
 
 
 def banner_image(collection_item: str) -> str:

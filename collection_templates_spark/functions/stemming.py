@@ -224,15 +224,6 @@ def _cvc(word: str) -> bool:
     )
 
 
-def _replace(word: str, sfx: str, repl: str, min_m: int) -> str | None:
-    if not word.endswith(sfx):
-        return None
-    stem = word[: -len(sfx)] if sfx else word
-    if _measure(stem) > min_m - 1:
-        return stem + repl
-    return word
-
-
 def porter_stem(word: str) -> str:  # noqa: C901 — the algorithm is a table
     """Original Porter stemmer (Porter 1980), steps 1a–5b."""
     w = word.lower()

@@ -194,17 +194,6 @@ def log_probability_udf_for(freqs_bc):
     return _udf
 
 
-def wordsplit_udf_for(freqs_bc):
-    """Real F11: wordninja-DP split of a simple token."""
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def _udf(s: pd.Series) -> pd.Series:
-        m = _model_for(freqs_bc)
-        return s.map(lambda v: m.split(v) if v is not None else None)
-
-    return _udf
-
-
 @F.pandas_udf(StringType())
 def banner_image_udf(s: pd.Series) -> pd.Series:
     return s.map(lambda v: banner_image(v) if v is not None else None)

@@ -2,17 +2,19 @@
 
 The reference's single biggest cost is NameRank scoring of ~2.14M distinct
 labels (11h52m single-threaded — BASELINE.md), kept warm in a RocksDB cache
-refreshed by a dedicated DAG (create_merged.py:223-288). The Spark-native
-equivalent is a parquet cache table keyed by input string:
+that each run only adds to (create_merged.py:223-288). The Spark-native
+equivalent is an append-only parquet cache table keyed by input string:
 
     refresh:  new_inputs = distinct(inputs) ANTI-JOIN cache
-              cache' = cache UNION compute(new_inputs)
-    use:      inputs LEFT-JOIN cache'
+              append compute(new_inputs) to cache
+    use:      inputs LEFT-JOIN cache
 
 Cost per run is proportional to NEW distinct inputs only, and compute
-parallelizes over the cluster. Bucketing the cache by key
-(operators/bucketing.py) makes the refresh anti-join and the use join
-co-located.
+parallelizes over the cluster. Files already in the cache are never
+rewritten, so a frame read from it before a refresh keeps working (it sees
+the keys it listed), and a refresh with no new key appends one empty file.
+Bucketing the cache by key (operators/bucketing.py) makes the refresh
+anti-join and the use join co-located.
 """
 
 from __future__ import annotations
@@ -29,17 +31,11 @@ def refresh_cache(
     inputs: DataFrame,
     key_col: str,
     compute: Callable[[Column], Column],
-    value_col: str = "value",
 ) -> DataFrame:
-    """Ensure every distinct ``inputs[key_col]`` exists in the cache;
-    compute only the missing keys. Returns the refreshed cache DataFrame.
-
-    The refresh OVERWRITES ``cache_path``: DataFrames read from that path
-    before the refresh become invalid (their file list is gone) — always
-    use the returned frame. At real scale, prefer an append-only layout
-    partitioned by refresh date if old readers must keep working.
-    """
-    new_keys = inputs.select(F.col(key_col).alias("key")).distinct()
+    """Ensure every distinct ``inputs[key_col]`` exists in the cache:
+    compute only the missing keys and append them as ``(key, value)``.
+    Returns the refreshed cache DataFrame."""
+    missing = inputs.select(F.col(key_col).alias("key")).distinct()
     # explicit existence probe (works for any Hadoop FS scheme, not just
     # local paths) instead of read-and-catch: the JVM would log a full
     # FileNotFoundException stack on every cold start, and a broad except
@@ -47,26 +43,13 @@ def refresh_cache(
     jpath = spark._jvm.org.apache.hadoop.fs.Path(cache_path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(jpath):
-        cache = spark.read.parquet(cache_path)
-        missing = new_keys.join(cache, "key", "left_anti")
-        merge_with = cache
-    else:  # first run: no cache yet
-        missing = new_keys
-        merge_with = None
+        missing = missing.join(spark.read.parquet(cache_path), "key", "left_anti")
     # spread before the CPU-bound compute: AQE coalesces the anti-join's
     # small-in-bytes output to one partition, which would serialize the
     # Python scoring UDF on a single core (see udfs.compute_on_distinct)
-    missing = missing.repartition(spark.sparkContext.defaultParallelism)
-    computed = missing.select("key", compute(F.col("key")).alias(value_col))
-    refreshed = (
-        merge_with.unionByName(computed) if merge_with is not None else computed
-    )
-    # write via a temp dir then re-read: parquet sources can't overwrite a
-    # path that is also an input of the running plan
-    tmp = cache_path.rstrip("/") + "__tmp"
-    refreshed.write.mode("overwrite").parquet(tmp)
-    final = spark.read.parquet(tmp)
-    final.write.mode("overwrite").parquet(cache_path)
+    missing.repartition(spark.sparkContext.defaultParallelism).select(
+        "key", compute(F.col("key")).alias("value")
+    ).write.mode("append").parquet(cache_path)
     return spark.read.parquet(cache_path)
 
 
@@ -74,7 +57,5 @@ def apply_cached(
     df: DataFrame, cache: DataFrame, key_col: str, out_col: str
 ) -> DataFrame:
     """Left-join the cache values onto ``df`` (missing keys stay null)."""
-    c = cache.select(
-        F.col("key").alias("___k"), F.col(cache.columns[1]).alias(out_col)
-    )
+    c = cache.select(F.col("key").alias("___k"), F.col("value").alias(out_col))
     return df.join(c, df[key_col] == F.col("___k"), "left").drop("___k")

@@ -158,11 +158,11 @@ def prepare_custom_collections(
     (udfs.interesting_score_udf_for / tokenize_name_udf_for); defaults are
     the documented stub score and the wordninja-or-identity tokenizer."""
     from collection_templates_spark.functions.udfs import (
+        banner_image_udf,
         compute_on_distinct,
         interesting_score_udf,
         namehash_udf,
     )
-    from collection_templates_spark.operators.factory import banner_udf
 
     members = prepare_members(raw, tokenize_udf=tokenize_udf)
     # per-member enrichment: score and namehash (on distinct labels), status
@@ -263,7 +263,7 @@ def prepare_custom_collections(
             F.col("keywords").alias("collection_keywords"),
             F.lit(None).cast("string").alias("collection_image"),
             F.lit(True).alias("public"),
-            F.coalesce("banner_image_in", banner_udf("collection_id")).alias(
+            F.coalesce("banner_image_in", banner_image_udf("collection_id")).alias(
                 "banner_image"
             ),
             F.lit(None).cast("string").alias("avatar_image"),

@@ -376,35 +376,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_hashes: int = 64,
-) -> DataFrame:
-    """MinHash signature per doc: for each of ``num_hashes`` seeded hash
-    functions, the min over the doc's shingle set. One explode + one groupBy;
-    the 64 mins are computed as 64 aggregate expressions in a single pass
-    (map-side partial aggregation keeps shuffle volume at docs × 64 longs).
-
-    Session side effect: excludes ``InferFiltersFromGenerate`` for the
-    session on first call (see ``_spread`` / ngram_jaccard_pairs).
-    """
-    idx = _spread(df).select(
-        F.col(id_col).alias("doc"),
-        F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
-    )
-    mins = [
-        F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sig = idx.groupBy("doc").agg(*mins)
-    return sig.select(
-        "doc", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("signature")
-    )
-
-
 def hashed_shingle_sets(
     df: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:

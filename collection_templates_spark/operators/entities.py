@@ -76,12 +76,6 @@ def build_all_stores(triples: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-def dump_stats(triples: DataFrame) -> DataFrame:
-    """A11: predicate histogram (the reference's `cut | sort | uniq -c`
-    Makefile stats, Makefile:31-37 / docs/readme_dump.md)."""
-    return triples.groupBy("predicate").count().orderBy(F.desc("count"))
-
-
 def title_qid_from_triples(triples: DataFrame) -> DataFrame:
     """db1 equivalent from `about` triples: en-wiki title → wikidata id.
 

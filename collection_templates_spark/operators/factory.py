@@ -14,19 +14,19 @@ two for even n — computed here natively on ``array_sort``ed copies.
 
 from __future__ import annotations
 
-import random
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from collection_templates_spark.functions.scoring import (
+    avatar_emoji,
     clamp_min,
     member_sort_key,
     ordered_list,
 )
 from collection_templates_spark.functions.udfs import (
+    banner_image_udf,
     compute_on_distinct,
     log_probability_udf,
     namehash_udf,
@@ -65,29 +65,18 @@ def make_avatar_emoji_udf(emoji_sets, emoji_counts, other_emojis):
 
     @F.pandas_udf(StringType())
     def avatar_udf(item: pd.Series, type_names: pd.Series) -> pd.Series:
-        out = []
-        for it, names in zip(item, type_names):
-            names = list(names) if names is not None else []
-            ordered = sorted(names, key=lambda t: emoji_counts.get(t, float("inf")))
-            rnd = random.Random()
-            rnd.seed(it)
-            if ordered and ordered[0] in emoji_sets:
-                out.append(rnd.choice(emoji_sets[ordered[0]]))
-            else:
-                out.append(rnd.choice(other_emojis))
-        return pd.Series(out)
+        return pd.Series([
+            avatar_emoji(
+                it,
+                list(names) if names is not None else [],
+                emoji_sets,
+                emoji_counts,
+                other_emojis,
+            )
+            for it, names in zip(item, type_names)
+        ])
 
     return avatar_udf
-
-
-@F.pandas_udf(StringType())
-def banner_udf(item: pd.Series) -> pd.Series:
-    def pick(it):
-        rnd = random.Random()
-        rnd.seed(it)
-        return f"tc-{rnd.randint(0, 19):02d}.png"
-
-    return item.map(pick)
 
 
 def collection_factory(
@@ -188,7 +177,7 @@ def collection_factory(
                 "collection_image"
             ),
             F.lit(True).alias("public"),
-            banner_udf("item").alias("banner_image"),
+            banner_image_udf("item").alias("banner_image"),
             F.lit(None).cast("string").alias("avatar_image"),
             avatar_udf("item", type_names_col).alias("avatar_emoji"),
             F.lit(False).alias("archived"),

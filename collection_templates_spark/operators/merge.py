@@ -63,12 +63,14 @@ def _qid_int(item: F.Column) -> F.Column:
     return F.regexp_replace(item, "^Q", "").cast("long")
 
 
-def merge_groups(df: DataFrame, group_col: str = "merge_key") -> DataFrame:
-    """A8: merge every group of collections into one (create_merged.py:549-576).
+def merge_groups(df: DataFrame) -> DataFrame:
+    """A8: merge every group of collections sharing ``merge_key`` into one
+    (create_merged.py:549-576).
 
     Within a group the reference folds left in file order; our deterministic
     fold order is ``merge_rank`` asc then numeric QID asc (callers set
-    merge_rank: 0 for the merge target — the list — and 1+ for sources).
+    merge_key, and merge_rank: 0 for the merge target — the list — and 1+
+    for sources).
     Field semantics:
       item           min numeric QID
       members        concat in fold order → sort rank desc → dedup first
@@ -80,7 +82,7 @@ def merge_groups(df: DataFrame, group_col: str = "merge_key") -> DataFrame:
       name/article   the merge target's (fold-first row)
       is_merged      true iff group has > 1 row
     """
-    w_order = Window.partitionBy(group_col).orderBy(
+    w_order = Window.partitionBy("merge_key").orderBy(
         F.asc("merge_rank"), F.asc(_qid_int(F.col("item")))
     )
     df = df.withColumn("___ord", F.row_number().over(w_order))
@@ -88,17 +90,17 @@ def merge_groups(df: DataFrame, group_col: str = "merge_key") -> DataFrame:
     # members: explode with fold position, rank-desc sort with stable
     # tie-break on (fold position, in-array position), dedup keep first
     m = df.select(
-        group_col,
+        "merge_key",
         "___ord",
         F.posexplode_outer("members").alias("mpos", "member"),
     ).filter(F.col("member").isNotNull())
-    w_dedup = Window.partitionBy(group_col, "member.curated").orderBy(
+    w_dedup = Window.partitionBy("merge_key", "member.curated").orderBy(
         F.desc("member.rank"), F.asc("___ord"), F.asc("mpos")
     )
     merged_members = (
         m.withColumn("rn", F.row_number().over(w_dedup))
         .filter(F.col("rn") == 1)
-        .groupBy(group_col)
+        .groupBy("merge_key")
         .agg(
             ordered_list(
                 F.col("member"), -F.col("member.rank"), F.col("___ord"), F.col("mpos")
@@ -106,20 +108,22 @@ def merge_groups(df: DataFrame, group_col: str = "merge_key") -> DataFrame:
         )
     )
 
-    kw = df.select(group_col, "___ord", F.posexplode_outer("keywords").alias("kpos", "kw"))
-    merged_kw = kw.groupBy(group_col).agg(
+    kw = df.select(
+        "merge_key", "___ord", F.posexplode_outer("keywords").alias("kpos", "kw")
+    )
+    merged_kw = kw.groupBy("merge_key").agg(
         ordered_list(F.col("kw"), F.col("___ord"), F.col("kpos")).alias("keywords")
     )
 
-    ty = df.select(group_col, F.explode_outer("types").alias("t"))
+    ty = df.select("merge_key", F.explode_outer("types").alias("t"))
     merged_ty = (
         ty.filter(F.col("t").isNotNull())
-        .groupBy(group_col)
+        .groupBy("merge_key")
         .agg(F.array_sort(F.array_distinct(F.collect_list("t"))).alias("types"))
     )
 
     head = (
-        df.groupBy(group_col)
+        df.groupBy("merge_key")
         .agg(
             F.concat(F.lit("Q"), F.min(_qid_int(F.col("item"))).cast("string")).alias(
                 "item"
@@ -153,9 +157,9 @@ def merge_groups(df: DataFrame, group_col: str = "merge_key") -> DataFrame:
         .drop("___multi", "___was_merged")
     )
     return (
-        head.join(merged_members, group_col, "left")
-        .join(merged_kw, group_col, "left")
-        .join(merged_ty, group_col, "left")
+        head.join(merged_members, "merge_key", "left")
+        .join(merged_kw, "merge_key", "left")
+        .join(merged_ty, "merge_key", "left")
         .withColumn("members", F.coalesce("members", F.array().cast(ArrayType(MEMBER_SCHEMA))))
         .withColumn("keywords", F.coalesce("keywords", F.array().cast("array<string>")))
         .withColumn("types", F.coalesce("types", F.array().cast(ArrayType(TYPE_SCHEMA))))
@@ -220,7 +224,7 @@ def merge_lists_and_categories(
         "merge_key", F.coalesce("___target", F.col("item"))
     ).withColumn("merge_rank", F.lit(1)).drop("___target")
 
-    return merge_groups(lists.unionByName(cats), "merge_key").drop("merge_key")
+    return merge_groups(lists.unionByName(cats)).drop("merge_key")
 
 
 # --- letter-range normalization (A9, create_merged.py:717-804) -------------
@@ -254,7 +258,7 @@ def _merge_named(df: DataFrame, key: str) -> DataFrame:
     by that key (fold order: numeric QID)."""
     keyed = df.withColumn("merge_key", F.col(key)).withColumn("merge_rank", F.lit(0))
     return (
-        merge_groups(keyed, "merge_key")
+        merge_groups(keyed)
         .withColumn("name", F.col("merge_key"))
         .drop("merge_key")
     )

@@ -9,24 +9,8 @@ integrity is the only check needing a second table (anti-join count).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-@dataclass
-class CheckResult:
-    check: str
-    column: str
-    metric: float
-    ok: bool
-
-
-def null_ratio(df: DataFrame, col: str) -> F.Column:
-    return (
-        F.sum(F.col(col).isNull().cast("long")) / F.count("*")
-    ).alias(f"null_ratio__{col}")
 
 
 def run_checks(

@@ -91,11 +91,6 @@ def produce_update_operations(
     )
 
 
-def archive_snapshot(docs: DataFrame, path: str, run_label: str) -> None:
-    """D1: dated snapshot table for the next run's diff."""
-    docs.write.mode("overwrite").parquet(f"{path}/snapshot={run_label}")
-
-
 def merge_upsert(
     base: DataFrame,
     changes: DataFrame,

@@ -37,13 +37,14 @@ FILTER_MEMBER_TYPES = ("Q13406463",)
 
 
 def resolve_member_qids(
-    grouped: DataFrame, title_qid: DataFrame, mapping_qid: DataFrame | None = None
+    grouped: DataFrame, title_qid: DataFrame, mapping_qid: DataFrame
 ) -> DataFrame:
     """J6: member title → QID with fallback; misses dropped.
 
     ``title_qid``: (title, qid) from the `about` triples (URL-quoted,
     underscore form — reference quotes the title before lookup,
-    create_collections.py:671). ``mapping_qid`` optional wikimapper fallback.
+    create_collections.py:671). ``mapping_qid``: (title, qid) wikimapper
+    fallback.
     Returns one row per (collection, member): mode, item, type, article,
     member_qid, member_title.
     """
@@ -59,44 +60,38 @@ def resolve_member_qids(
     t1 = title_qid.select(
         F.col("title").alias("___t"), F.col("qid").alias("___q1")
     )
-    out = member.join(t1, key == F.col("___t"), "left")
-    if mapping_qid is not None:
-        t2 = mapping_qid.select(
-            F.regexp_replace(F.col("title"), " ", "_").alias("___t2"),
-            F.col("qid").alias("___q2"),
-        )
-        out = out.join(t2, key == F.col("___t2"), "left")
-        qid = F.coalesce(F.col("___q1"), F.col("___q2"))
-    else:
-        qid = F.col("___q1")
+    t2 = mapping_qid.select(
+        F.regexp_replace(F.col("title"), " ", "_").alias("___t2"),
+        F.col("qid").alias("___q2"),
+    )
     return (
-        out.withColumn("member_qid", qid)
+        member.join(t1, key == F.col("___t"), "left")
+        .join(t2, key == F.col("___t2"), "left")
+        .withColumn("member_qid", F.coalesce(F.col("___q1"), F.col("___q2")))
         .filter(F.col("member_qid").isNotNull())
         .select("mode", "item", "type", "article", "member_qid", "member_title")
     )
 
 
-def subclass_edges(db2: DataFrame, db6: DataFrame | None = None) -> DataFrame:
+def subclass_edges(db2: DataFrame, db6: DataFrame) -> DataFrame:
     """Directed (child → parent) subclass edges, plus redirect edges for
     nodes with no entry in the type store (the reference's same_as fallback
     applies ONLY on a full KeyError, create_collections.py:571-578)."""
     edges = db2.select(
         F.col("id").alias("src"), F.explode("subclass_of").alias("dst")
     )
-    if db6 is not None:
-        redirects = (
-            db6.filter(F.col("same_as").isNotNull())
-            .select(F.col("id").alias("src"), F.col("same_as").alias("dst"))
-            .join(db2.select(F.col("id").alias("src")), "src", "left_anti")
-        )
-        edges = edges.unionByName(redirects)
-    return edges
+    redirects = (
+        db6.filter(F.col("same_as").isNotNull())
+        .select(F.col("id").alias("src"), F.col("same_as").alias("dst"))
+        .join(db2.select(F.col("id").alias("src")), "src", "left_anti")
+    )
+    return edges.unionByName(redirects)
 
 
 def validate_members(
     resolved: DataFrame,
     db2: DataFrame,
-    db6: DataFrame | None = None,
+    db6: DataFrame,
     max_iterations: int = 40,
 ) -> DataFrame:
     """J13 end-to-end: per-collection valid member lists + counts.
@@ -144,22 +139,20 @@ def validate_members(
             F.coalesce("subclass_of", F.array()),
         ).alias("entries"),
     )
-    m = resolved.select("member_qid").distinct().join(typed, "member_qid", "left")
-    if db6 is not None:
-        redir = db6.select(
-            F.col("id").alias("member_qid"), F.col("same_as").alias("___redir")
-        )
-        typed2 = typed.select(
-            F.col("member_qid").alias("___redir"), F.col("entries").alias("___e2")
-        )
-        m = (
-            m.join(redir, "member_qid", "left")
-            .join(typed2, "___redir", "left")
-            .select(
-                "member_qid",
-                F.coalesce("entries", "___e2").alias("entries"),
-            )
-        )
+    redir = db6.select(
+        F.col("id").alias("member_qid"), F.col("same_as").alias("___redir")
+    )
+    typed2 = typed.select(
+        F.col("member_qid").alias("___redir"), F.col("entries").alias("___e2")
+    )
+    m = (
+        resolved.select("member_qid")
+        .distinct()
+        .join(typed, "member_qid", "left")
+        .join(redir, "member_qid", "left")
+        .join(typed2, "___redir", "left")
+        .select("member_qid", F.coalesce("entries", "___e2").alias("entries"))
+    )
     entries = m.filter(F.col("entries").isNotNull()).select(
         "member_qid", F.explode("entries").alias("entry")
     )

@@ -30,6 +30,16 @@ def test_refresh_cache_incremental(spark, tmp_path):
     out = apply_cached(run2, c2, "k", "v")
     assert {(r.k, r.v) for r in out.collect()} == {("b", "B"), ("c", "C")}
 
+    # the refresh only appends: a frame read before it still works, and
+    # no temporary copy of the cache is left behind
+    assert {(r.key, r.value) for r in c1.collect()} == {("a", "A"), ("b", "B")}
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["cache"]
+
+    # known keys only: nothing is added, every key stays unique
+    c3 = refresh_cache(spark, path, run1.unionByName(run2), "k", compute)
+    keys = [r.key for r in c3.collect()]
+    assert sorted(keys) == ["a", "b", "c"]
+
 
 def test_run_checks(spark):
     df = spark.createDataFrame(

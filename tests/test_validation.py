@@ -103,7 +103,8 @@ def test_validate_members_keyed_by_mode(spark):
         "mode string, item string, type array<string>, article string,"
         " member_qid string, member_title string",
     )
-    out = {r.mode: r for r in validate_members(resolved, db2).collect()}
+    db6 = _db6(spark, [])
+    out = {r.mode: r for r in validate_members(resolved, db2, db6).collect()}
     assert set(out) == {"category", "list"}
     assert all(r.item == "Q7" for r in out.values())
     cat, lst = out["category"], out["list"]
@@ -120,7 +121,7 @@ def test_typeless_collection_dropped(spark):
         "mode string, item string, type array<string>, article string,"
         " member_qid string, member_title string",
     )
-    assert validate_members(resolved, db2).count() == 0  # P10
+    assert validate_members(resolved, db2, _db6(spark, [])).count() == 0  # P10
 
 
 def test_same_as_edge_only_for_missing_nodes(spark):

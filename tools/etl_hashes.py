@@ -1,22 +1,29 @@
-"""Fingerprint one day of the collections ETL, to check that a refactor of
+"""Fingerprint two days of the collections ETL, to check that a refactor of
 the pipeline keeps the same output.
 
 Generates the ``etl_daily`` benchmark corpus (``perfbench/corpus.py``, day 1,
-``perfbench/etl.py``'s member count) once under ``--scratch``, runs day 1 the
-way the benchmark does (``etl._day``: ``run_pipeline(workdir=…)`` plus the
-upsert operations) in this (fresh) process, and prints one JSON line:
+``perfbench/etl.py``'s member count) and the day-2 member edges of one fixed
+seed once under ``--scratch``. In this (fresh) process it then runs day 1
+the way the benchmark builds its day-1 state, and day 2 the way the
+benchmark measures it: ``etl._day`` (``run_pipeline(workdir=…)`` plus the
+upsert operations) in a fresh workdir that holds a copy of day 1's score
+cache, against day 1's ``merged_final`` as the previous snapshot. Day 2 is
+where the score cache is appended to. Prints one JSON line:
 
-    {"jobs": <Spark jobs of the run>,
-     "boundaries": {<name>: {"rows": …, "rows_sha256": …, "schema_sha256": …}}}
+    {"jobs": <Spark jobs of day 1>,
+     "boundaries": {<name>: {"rows": …, "rows_sha256": …, "schema_sha256": …}},
+     "day2": {"jobs": …, "boundaries": {…}}}
 
-for every persisted boundary (``*.parquet`` in the workdir, the score cache
-and ``operations`` included). ``rows_sha256`` hashes the sorted JSON form of
-every row, so it does not depend on partitioning or row order.
+for every persisted boundary of each day (``*.parquet`` in the workdir, the
+score cache and ``operations`` included). ``rows_sha256`` hashes the sorted
+JSON form of every row, so it does not depend on partitioning, file layout
+or row order.
 
 Usage: python tools/etl_hashes.py [--scratch DIR]
 
 Run it from two checkouts with the same ``--scratch`` and compare the
-``boundaries`` objects; each checkout gets its own workdir there.
+``boundaries`` objects of both days; each checkout gets its own workdirs
+there.
 """
 
 from __future__ import annotations
@@ -36,6 +43,9 @@ sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 import corpus  # noqa: E402  (perfbench/corpus.py)
 import etl  # noqa: E402  (perfbench/etl.py)
 
+# the day-2 edges: the seed of the first traced ``etl_daily`` run
+DAY2_SEED = 1
+
 
 def _fingerprint(df) -> dict:
     from pyspark.sql import functions as F
@@ -54,6 +64,16 @@ def _fingerprint(df) -> dict:
     }
 
 
+def _boundaries(spark, work: str) -> dict:
+    return {
+        name.removesuffix(".parquet"): _fingerprint(
+            spark.read.parquet(os.path.join(work, name))
+        )
+        for name in sorted(os.listdir(work))
+        if name.endswith(".parquet")
+    }
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument(
@@ -62,14 +82,20 @@ def main() -> int:
     args = ap.parse_args()
 
     os.makedirs(args.scratch, exist_ok=True)
-    # written once; later runs, from any checkout, reuse it
+    # written once; later runs, from any checkout, reuse them
     data = os.path.join(args.scratch, f"corpus-m{etl.MEMBERS}")
     if not os.path.exists(data):
         etl._atomic_dir(data, lambda tmp: corpus.write_base(etl.MEMBERS, tmp))
+    edges2 = os.path.join(args.scratch, f"day2-s{DAY2_SEED}-m{etl.MEMBERS}")
+    if not os.path.exists(edges2):
+        etl._atomic_dir(
+            edges2, lambda tmp: corpus.write_day2(DAY2_SEED, etl.MEMBERS, tmp)
+        )
     work = os.path.join(
         args.scratch, "work-" + hashlib.sha256(ROOT.encode()).hexdigest()[:12]
     )
     shutil.rmtree(work, ignore_errors=True)
+    work1, work2 = os.path.join(work, "day1"), os.path.join(work, "day2")
 
     # Spark's Python workers import the package from this checkout
     os.environ["PYTHONPATH"] = os.pathsep.join(
@@ -85,20 +111,33 @@ def main() -> int:
     )
     try:
         sc = spark.sparkContext
-        sc.setJobGroup("etl_hashes", "day 1")
-        etl._day(spark, etl._inputs(spark, data, data, "day1"), work)
-        jobs = len(sc.statusTracker().getJobIdsForGroup("etl_hashes"))
 
-        boundaries = {
-            name.removesuffix(".parquet"): _fingerprint(
-                spark.read.parquet(os.path.join(work, name))
-            )
-            for name in sorted(os.listdir(work))
-            if name.endswith(".parquet")
+        def day(group: str, inputs, workdir: str) -> int:
+            sc.setJobGroup(group, group)
+            etl._day(spark, inputs, workdir)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        jobs1 = day(
+            "etl_hashes day 1", etl._inputs(spark, data, data, "day1"), work1
+        )
+        # day 2 starts from day 1's score cache, as etl.run does
+        shutil.copytree(
+            f"{work1}/score_cache.parquet", f"{work2}/score_cache.parquet"
+        )
+        previous = spark.read.parquet(f"{work1}/merged_final.parquet")
+        jobs2 = day(
+            "etl_hashes day 2",
+            etl._inputs(spark, data, edges2, "day2", previous),
+            work2,
+        )
+        out = {
+            "jobs": jobs1,
+            "boundaries": _boundaries(spark, work1),
+            "day2": {"jobs": jobs2, "boundaries": _boundaries(spark, work2)},
         }
     finally:
         spark.stop()
-    print(json.dumps({"jobs": jobs, "boundaries": boundaries}, sort_keys=True))
+    print(json.dumps(out, sort_keys=True))
     return 0
 
 
